@@ -19,7 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from graph_db_spark.session import get_spark  # noqa: E402
+from graph_db_spark.session import get_spark, host_cpus  # noqa: E402
 
 
 def force(df) -> None:
@@ -137,7 +137,7 @@ BANDS: dict[str, tuple[float, float]] = {
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = host_cpus()
     sf = sf_dir.rstrip("/").split("sf")[-1]
     # Entry-name subset filter — set ONLY by tests (the harness-contract
     # pytest runs a ~10-entry representative subset at sf0.001 so the full

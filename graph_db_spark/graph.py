@@ -437,12 +437,7 @@ class GraphSnapshot:
         """BFS from root via iterative frontier joins — the Pregel-style
         re-expression of the reference's queue+visited-set walk
         (Graph.hs:82-118). Driver loop (Catalyst has no recursion); lineage
-        truncated per iteration with localCheckpoint.
-
-        The visited set is ONE materialized frame, extended (and
-        re-checkpointed) per level — each level's anti-join plan is O(1)
-        regardless of depth, instead of re-unioning every prior frontier
-        (which grows the plan O(depth²) across the loop)."""
+        truncated per level with localCheckpoint (``pregel._bfs``)."""
         edges = self.edges.select("src", "dst").persist()
         try:
             return self._reachable_on(edges, root_id, max_iters, broadcast_frontier)
@@ -463,7 +458,9 @@ class GraphSnapshot:
         max_iters: int,
         broadcast_frontier: bool,
     ) -> DataFrame:
-        """BFS loop over a caller-persisted narrow (src, dst) frame.
+        """BFS over a caller-persisted narrow (src, dst) frame → the
+        checkpointed reachable id set. ``pregel._bfs`` runs the level
+        loop; this method only supplies the level expansion.
 
         With ``broadcast_frontier`` (default) the frontier and visited
         frames — bounded by the reachable-node count — are broadcast, so
@@ -472,9 +469,8 @@ class GraphSnapshot:
         + LeftAnti, no exchange on the fat side), and the anti-join runs
         BEFORE the distinct so already-visited dsts never enter the
         shuffle. The broadcast is SIZE-GUARDED, not unconditional: the
-        loop counts the (already-materialized) frontier each level — a
-        near-free job on a checkpointed frame, replacing isEmpty — and
-        once the visited set passes BFS_BROADCAST_MAX_IDS it degrades to
+        level sizes are observed on their checkpoints, and once the
+        visited set passes BFS_BROADCAST_MAX_IDS it degrades to
         shuffle joins + AQE mid-traversal, so a 100M-node reachable set
         completes instead of failing on the broadcast limit.
         ``broadcast_frontier=False`` disables the broadcast path from the
@@ -501,11 +497,9 @@ class GraphSnapshot:
           reuses its partitioning and sort order, so only the frontier
           and the visited set — the honest per-level floor — move
           through the network."""
-        spark = self.spark
-        from graph_db_spark.pregel import _checkpoint_observed, release
+        from graph_db_spark.pregel import _bfs
 
-        plain = lambda df: df  # noqa: E731
-        hint = F.broadcast if broadcast_frontier else plain
+        spark = self.spark
         try:
             nparts = max(
                 spark.sparkContext.defaultParallelism,
@@ -513,105 +507,40 @@ class GraphSnapshot:
             )
         except Exception:
             nparts = spark.sparkContext.defaultParallelism
-        edges_by_src = None  # lazily-built degraded-mode twin (see above)
+        twin: list[DataFrame] = []  # degraded-mode edge twin, built once (see above)
+        scratch: list[DataFrame] = []
 
-        # A/B toggle for stress measurement: SPARK_GRAFT_BFS_EDGES_TWIN=0
-        # keeps degraded levels on the raw cached edge list
-        import os as _os
-
-        use_twin = _os.environ.get("SPARK_GRAFT_BFS_EDGES_TWIN", "1") != "0"
-
-        def level_edges():
-            nonlocal edges_by_src
-            if hint is F.broadcast or not use_twin:
-                return edges
-            if edges_by_src is None:
-                edges_by_src = (
-                    edges.repartition(nparts, "src")
-                    .sortWithinPartitions("src")
-                    .persist()
+        def expand(frontier, visited, _level, n_visited):
+            src = frontier.withColumnRenamed("id", "src")
+            if broadcast_frontier and n_visited <= self.BFS_BROADCAST_MAX_IDS:
+                return (
+                    edges.join(F.broadcast(src), "src")
+                    .select(F.col("dst").alias("id"))
+                    .join(F.broadcast(visited), "id", "left_anti")
+                    .distinct()
                 )
-            return edges_by_src
+            # degraded mode: checkpoint the candidates so the anti-join
+            # cannot be pushed below the frontier join onto the raw edge
+            # table (see docstring)
+            if not twin:
+                twin.append(
+                    edges.repartition(nparts, "src").sortWithinPartitions("src").persist()
+                )
+            cand = (
+                twin[0].join(src, "src")
+                .select(F.col("dst").alias("id"))
+                .distinct()
+                .localCheckpoint(eager=True)
+            )
+            scratch.append(cand)
+            return cand.join(visited, "id", "left_anti")
 
-        frontier = spark.createDataFrame([(root_id,)], "id LONG").localCheckpoint(
-            eager=True
-        )
-        visited = frontier
-        n_visited = 1
-        # Visited-set consolidation (round 16, see pregel._VISITED_CONSOLIDATE):
-        # level frames are already checkpointed, so between consolidations the
-        # visited set is a LAZY union over those scans — the old per-level
-        # full-visited re-checkpoint was O(|V|) written bytes + one
-        # driver-blocking job per level. pending_frames tracks superseded
-        # frontier checkpoints still referenced by the lazy union.
-        from graph_db_spark.pregel import _VISITED_CONSOLIDATE
-
-        pending_frames: list = []
-        consol = None
-        pending = 0
         try:
-            for _ in range(max_iters):
-                # level size observed free on the checkpoint action (replaces
-                # the per-level count job on the materialized frame)
-                if hint is F.broadcast:
-                    nxt, nsig = _checkpoint_observed(
-                        edges.join(hint(frontier.withColumnRenamed("id", "src")), "src")
-                        .select(F.col("dst").alias("id"))
-                        .join(hint(visited), "id", "left_anti")
-                        .distinct(),
-                        n=F.count(F.lit(1)),
-                    )
-                else:
-                    # degraded mode: checkpoint the candidates so the
-                    # anti-join cannot be pushed below the frontier join
-                    # onto the raw edge table (see docstring)
-                    cand = (
-                        level_edges()
-                        .join(frontier.withColumnRenamed("id", "src"), "src")
-                        .select(F.col("dst").alias("id"))
-                        .distinct()
-                        .localCheckpoint(eager=True)
-                    )
-                    nxt, nsig = _checkpoint_observed(
-                        cand.join(visited, "id", "left_anti"),
-                        n=F.count(F.lit(1)),
-                    )
-                    release(cand)
-                n_new = nsig["n"] or 0
-                if n_new == 0:
-                    release(nxt)
-                    break
-                n_visited += n_new
-                if n_visited > self.BFS_BROADCAST_MAX_IDS:
-                    hint = plain
-                visited = visited.unionByName(nxt)
-                pending += 1
-                pending_frames.append(frontier)  # superseded; union still reads it
-                frontier = nxt
-                if pending >= _VISITED_CONSOLIDATE:
-                    new_visited = visited.localCheckpoint(eager=True)
-                    for p in pending_frames:
-                        if p is not frontier:
-                            release(p)
-                    pending_frames = []
-                    if consol is not None:
-                        release(consol)
-                    consol, visited, pending = new_visited, new_visited, 0
-            if pending:
-                # materialize the tail union once, then free the pieces
-                final_v = visited.localCheckpoint(eager=True)
-                for p in pending_frames:
-                    release(p)
-                if consol is not None:
-                    release(consol)
-                release(frontier)  # folded into final_v
-                visited = final_v
-            elif frontier is not visited:
-                release(frontier)  # already folded into the last consolidation
-            return visited
+            start = spark.createDataFrame([(root_id,)], "id LONG")
+            return _bfs(start, expand, max_iters, ["id"], keep_levels=False, scratch=scratch)
         finally:
-            if edges_by_src is not None:
-                edges_by_src.unpersist()
+            if twin:
+                twin[0].unpersist()
 
     def get_stats(self, broadcast_frontier: bool = True) -> GraphStats:
         """GraphDB.hs:355-356 / Graph.hs:82-118: (reachable nodes, distinct

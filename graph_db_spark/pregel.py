@@ -1,67 +1,46 @@
-"""Pregel-style iterative graph analytics (the BASELINE.json north star:
-"GraphX/Pregel for analytics queries", re-expressed as DataFrame join
-loops — no Scala bridge needed).
+"""Pregel-style graph analytics: the reference's getStats BFS
+(Graph.hs:82-118) generalized into DataFrame join loops — ``bfs_levels``,
+``tagged_bfs_levels``, ``connected_components``,
+``connected_components_star``, ``shortest_paths``, ``pagerank``,
+``personalized_pagerank``, ``kcore`` and ``label_propagation``.
 
-The reference's only whole-graph analytic is the BFS inside getStats
-(Graph.hs:82-118); these operators generalize that frontier-join pattern:
-
-- ``bfs_levels``            — single-source (or multi-source) BFS with
-                              hop distance.
-- ``connected_components``  — iterative min-label propagation over the
-                              undirected view (converges in O(diameter)
-                              rounds; each round = one join + one agg).
-- ``shortest_paths``        — weighted SSSP by synchronous Bellman-Ford
-                              relaxation (one join + min-agg per round).
-- ``pagerank``              — fixed-iteration power method; each round is
-                              one join + one sum-agg, map-side combinable.
-
-Scale notes: every round truncates lineage with localCheckpoint (else the
-plan grows unboundedly — Catalyst has no recursion); frontiers/labels are
-narrow (id, value) frames hash-partitioned on id; convergence checks are
-single count() actions on already-materialized frames; superseded
-checkpoint frames are released each round (see ``release``) so a long
-loop holds at most one generation of blocks, not all of them.
+Each operator only defines a step and a convergence signature; one of two
+private drivers runs it. ``_fixpoint`` folds ``_ROUND_FOLD`` rounds into
+one eager ``localCheckpoint`` (Catalyst has no recursion; the checkpoint
+truncates lineage), observes the signature on that same action, tests
+convergence, counts rounds and releases the superseded generation.
+``_bfs`` runs the level loop: observed level sizes, a lazy visited union
+consolidated every ``_VISITED_CONSOLIDATE`` levels, and the releases.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from graph_db_spark.session import frontier_paced
 
+#: Consolidate the BFS visited union into one checkpoint every N levels:
+#: bounds the anti-join plan at N union branches, and rewrites the whole
+#: visited set every Nth level instead of every level.
+_VISITED_CONSOLIDATE = 8
 
-def _checkpoint_observed(df: DataFrame, **metrics) -> tuple[DataFrame, dict]:
-    """Eager-localCheckpoint *df* with CollectMetrics attached, returning
-    (checkpointed frame, metric values).
-
-    The per-round convergence signal of an iterative loop (did any label
-    change? is the frontier empty? how many edges survived?) is an
-    aggregate of the very frame the round already materializes. Computing
-    it as a separate ``count()``/join job doubles the round's job count;
-    ``observe`` rides the checkpoint action itself, so the signal is FREE —
-    the executors fold the metric while writing the checkpoint blocks.
-    Metrics are exact (full-data aggregates through the SQL engine), not
-    sampled."""
-    obs = Observation()
-    out = df.observe(obs, *[expr.alias(name) for name, expr in metrics.items()])
-    out = out.localCheckpoint(eager=True)
-    return out, obs.get
+#: Logical rounds composed lazily into ONE checkpoint job: driver-blocking
+#: actions halve, shuffle bytes stay flat (±1%, plans/r17/pregel_fold_ab.md).
+#: Bit-identical: folded steps are idempotent at their fixpoint and the
+#: signatures monotone. 1 runs unfolded (the tests' reference path).
+_ROUND_FOLD = 2
 
 
-def release(df: DataFrame) -> None:
-    """Drop a superseded localCheckpoint's blocks.
-
-    Iterative loops replace their frontier/label frames every round;
-    without this the orphaned checkpoint blocks sit in the block manager
-    for the life of the session (observed: 15 leaked RDDs after two BFS
-    runs), squeezing executor storage memory at scale.
-
-    ``DataFrame.unpersist`` can't do this — checkpoint blocks bypass the
-    CacheManager — so we unpersist the LogicalRDD's backing RDD through
-    the plan. Only call on frames nothing downstream references: a
-    truncated-lineage frame is unrecoverable once its blocks are gone
-    (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on any later action). Frames that
-    aren't checkpoint scans are left untouched."""
+def release(df: DataFrame | None) -> None:
+    """Drop a superseded localCheckpoint's blocks (they bypass the
+    CacheManager, so ``unpersist`` can't), else they stay for the
+    session's life. Only for frames nothing downstream reads: a
+    truncated-lineage frame cannot be recomputed. Frames that are not
+    checkpoint scans, and None, are left alone."""
+    if df is None:
+        return
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getName().endswith(".LogicalRDD"):
@@ -70,149 +49,217 @@ def release(df: DataFrame) -> None:
         pass  # best-effort hygiene; never fail the computation over it
 
 
-#: Consolidate the BFS visited union into one checkpoint every N levels
-#: (bfs_levels / tagged_bfs_levels). 8 bounds the anti-join plan at 8
-#: union branches while cutting the per-level full-visited checkpoint
-#: rewrite to every 8th level.
-_VISITED_CONSOLIDATE = 8
+def _release_all(frames: list | None) -> None:
+    while frames:
+        release(frames.pop())
 
-#: Fold N logical rounds (relaxations / peels / power iterations) into
-#: ONE localCheckpoint job (round 17, guide §2.6 job-latency
-#: amortization). Every fixed-point loop here pays one driver-blocking
-#: checkpoint action per round; composing two rounds lazily inside a
-#: single plan halves that action count while the per-round shuffle
-#: volume is unchanged (a round's intermediate frame feeds the next
-#: round's consumers through the SAME exchanges — event-log A/B:
-#: shuffle bytes flat to ±1% on sssp/pagerank/kcore,
-#: plans/r17/pregel_fold_ab.md), and the intermediate state frame is
-#: never materialized to checkpoint blocks at all.
-#: Convergence stays exact at fold granularity because every folded
-#: loop's round function is idempotent at its fixpoint and its
-#: signature is monotone: an unchanged signature across a fold proves
-#: neither half changed, and extra post-convergence rounds inside a
-#: fold are identities — so the returned frame is bit-identical to the
-#: unfolded loop's. 2 keeps the per-checkpoint plan depth trivial
-#: (Catalyst has no recursion; the fold bounds it at 2 rounds).
-#: 1 restores the unfolded loops exactly (A/B and rollback knob).
-_ROUND_FOLD = 2
 
-#: connected_components_star analogue of _ROUND_FOLD (round 17): compose
-#: the large-star and small-star halves of one round into ONE checkpoint
-#: job instead of eagerly checkpointing the large-star output (e1).
-#: OFF — measured NO-WIN (guide §1.1 empirical loop): even with the
-#: fused intermediate pinned to hashpartitioning(u) so its three
-#: consumers share one exchange, the event-log A/B reads +11% shuffle
-#: write / +39% shuffle read for a wall-flat result at sf0.1
-#: (tools/shuffle_bytes.py --unfolded; plans/r17/pregel_fold_ab.md) —
-#: trading shuffle volume for one driver sync per round is the wrong
-#: direction at scale (§2.2). The fused path is kept under this knob as
-#: the documented experiment.
-_STAR_FUSE_HALF_ROUNDS = False
+def _rows() -> dict:
+    return {"n": F.count(F.lit(1))}
+
+
+def _project(df: DataFrame, cols: list[str] | None) -> DataFrame:
+    return df if cols is None or df.columns == cols else df.select(*cols)
+
+
+def _checkpoint(
+    df: DataFrame, signature: dict | None = None, cols: list[str] | None = None
+) -> tuple[DataFrame, dict | None]:
+    """Eager-localCheckpoint *df* projected to *cols* → (frame, *signature*
+    values or None), observed exactly on the checkpoint action itself (no
+    extra job); it may read columns the projection drops."""
+    if not signature:
+        return _project(df, cols).localCheckpoint(eager=True), None
+    obs = Observation()
+    df = df.observe(obs, *[expr.alias(name) for name, expr in signature.items()])
+    return _project(df, cols).localCheckpoint(eager=True), obs.get
+
+
+def _unchanged(prev: tuple, cur: tuple) -> bool:
+    return prev[1] == cur[1]
+
+
+def _fixpoint(
+    state: DataFrame,
+    step,
+    max_iters: int,
+    signature: dict | None = None,
+    sig: dict | None = None,
+    converged=_unchanged,
+    fold: bool = True,
+    per_round: bool = False,
+    scratch: list | None = None,
+) -> tuple[DataFrame, int]:
+    """Iterate the lazy *step* from the checkpointed *state* → (state, rounds).
+
+    Each pass composes ``_ROUND_FOLD`` steps (1 if not *fold*) and
+    checkpoints once, observing *signature*. Without one the loop runs
+    *max_iters* rounds; with one it stops when ``converged(prev, cur)``
+    holds for (frame, values) pairs (*sig*: the start's values), by
+    default when the values are unchanged.
+
+    *per_round* tests every logical round: the signature must be the row
+    count ``n``, and inner steps get ``step(frame, probe)``, *probe* an
+    observed twin the step streams exactly once. AQE may prune a probe
+    with its metrics when the pass ends empty; those rounds are then
+    recounted from their lazy frames. Frames a step checkpoints itself go
+    on *scratch*, released with the superseded state."""
+    cols = state.columns
+    rounds = 0
+    while rounds < max_iters:
+        k = min(_ROUND_FOLD if fold else 1, max_iters - rounds)
+        cur, inner = state, []
+        for i in range(k):
+            cur = _project(cur, cols)
+            if per_round and i:
+                obs = Observation()
+                inner.append((cur, obs))
+                cur = step(cur, cur.observe(obs, *[e.alias(n) for n, e in signature.items()]))
+            else:
+                cur = step(cur)
+        new, new_sig = _checkpoint(cur, signature, cols)
+        done = False
+        if signature is None:
+            rounds += k
+        else:
+            if per_round and not new_sig["n"]:
+                seen = [(mid, {"n": mid.count()}) for mid, _ in inner]
+            else:
+                seen = [(mid, obs.get) for mid, obs in inner]
+            prev = (state, sig)
+            for pair in seen + [(new, new_sig)]:
+                rounds += 1 if per_round else k
+                if converged(prev, pair):
+                    done = True
+                    break
+                prev = pair
+            sig = new_sig
+        release(state)
+        _release_all(scratch)
+        state = new
+        if done:
+            break
+    return state, rounds
+
+
+def _bfs(
+    start: DataFrame,
+    expand,
+    max_iters: int,
+    key: list[str],
+    keep_levels: bool = True,
+    scratch: list | None = None,
+):
+    """The BFS level loop (Graph.hs:87-117's visited-set queue, set-oriented).
+
+    ``expand(frontier, visited, level, n_visited)`` returns the next level
+    lazily, anti-joined against *visited* (the *key* columns of all levels
+    so far, *n_visited* rows); each level is checkpointed with its size
+    observed, and an empty one ends the walk. Levels are checkpoints
+    already, so *visited* is a lazy union over them, consolidated only
+    every ``_VISITED_CONSOLIDATE`` levels (not O(|V|·depth) bytes and a
+    job per level). Returns the level frames if *keep_levels*, else the
+    visited set as one checkpoint, releasing levels once superseded and
+    consolidated. *scratch* as in ``_fixpoint``."""
+    frontier, sig = _checkpoint(start, _rows())
+    n_visited = sig["n"]
+    levels = [frontier]
+    visited = _project(frontier, key)
+    consolidated, pending = None, 0
+    for level in range(1, max_iters + 1):
+        nxt, sig = _checkpoint(expand(frontier, visited, level, n_visited), _rows())
+        _release_all(scratch)
+        if not sig["n"]:
+            release(nxt)
+            break
+        n_visited += sig["n"]
+        levels.append(nxt)
+        visited = visited.unionByName(_project(nxt, key))
+        frontier = nxt
+        pending += 1
+        if pending >= _VISITED_CONSOLIDATE:
+            new = visited.localCheckpoint(eager=True)
+            release(consolidated)
+            if not keep_levels:
+                for f in levels[:-1]:
+                    release(f)
+                del levels[:-1]
+            consolidated = visited = new
+            pending = 0
+    if keep_levels:
+        release(consolidated)
+        return levels
+    if pending:
+        visited = visited.localCheckpoint(eager=True)
+        release(consolidated)
+    elif consolidated is None:
+        return visited  # nothing beyond the start: it is the visited set
+    for f in levels:
+        release(f)
+    return visited
 
 
 def undirected(edges: DataFrame) -> DataFrame:
-    """Both directions of an edge list (src,dst) — the union is cheaper at
-    scale than maintaining a second sorted structure, and Catalyst pushes
-    the per-direction filters into both branches."""
+    """Both directions of an edge list (src, dst), as one union."""
     return edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
 
 
 def _src_partitioned(edges: DataFrame) -> DataFrame:
-    """Hash-partition an edge frame by ``src`` BEFORE persisting it for an
-    iterative loop. A persisted-but-unpartitioned edge list gets an
-    Exchange inserted over it EVERY round (the per-round join on src needs
-    hash distribution); partitioned once, the cached layout satisfies the
-    join's requirement for the whole loop and only the small per-round
-    state frame shuffles — the GraphX edge-partition-reuse pattern, and
-    the difference between O(rounds) and O(1) edge shuffles at 100 TB."""
+    """Partition by ``src`` before persisting for a loop, so every round's
+    join on src reuses the layout and only the state frame shuffles."""
     return edges.repartition("src")
+
+
+def _bfs_levels(
+    edges: DataFrame, sources: DataFrame, max_iters: int, directed: bool, key: list[str]
+) -> DataFrame:
+    e = _src_partitioned(
+        edges.select("src", "dst") if directed else undirected(edges)
+    ).persist()
+    tags = key[1:]
+
+    def expand(frontier, visited, level, _n):
+        return (
+            e.join(frontier.select(F.col("id").alias("src"), *tags), "src")
+            .select(F.col("dst").alias("id"), *tags)
+            .distinct()
+            .join(visited, key, "left_anti")
+            .select(*key, F.lit(level).alias("level"))
+        )
+
+    try:
+        start = sources.select(*key).distinct().select(*key, F.lit(0).alias("level"))
+        return reduce(lambda a, b: a.unionByName(b), _bfs(start, expand, max_iters, key))
+    finally:
+        e.unpersist()
 
 
 @frontier_paced
 def bfs_levels(
     edges: DataFrame, sources: DataFrame, max_iters: int = 1000, directed: bool = True
 ) -> DataFrame:
-    """(id, level) for every vertex reachable from *sources* (level 0).
+    """(id, level) for every vertex reachable from *sources* (level 0)."""
+    return _bfs_levels(edges, sources, max_iters, directed, ["id"])
 
-    The reference's visited-set BFS queue (Graph.hs:87-117) set-oriented:
-    each round expands the whole frontier in one join, anti-joins the
-    visited set, and checkpoints the new frontier.
 
-    Visited-set bookkeeping (round 16, guide §1.2/§2.4): the level
-    frames are ALREADY checkpointed, so the visited set is kept as a
-    lazy union over those scans and only CONSOLIDATED into one
-    checkpoint every ``_VISITED_CONSOLIDATE`` levels — the old
-    per-level ``visited.unionByName(nxt).localCheckpoint()`` re-wrote
-    the ENTIRE visited set every level (O(|V|·depth) checkpoint bytes
-    over a traversal, plus one driver-blocking job per level); the
-    consolidated form writes it every 8th level (anti-join read cost is
-    unchanged — the union of the pieces holds exactly the same rows)
-    while the plan depth stays bounded at 8 union branches.
-    """
-    from functools import reduce
-
-    e = _src_partitioned(
-        edges.select("src", "dst") if directed else undirected(edges)
-    ).persist()
-    try:
-        frontier = (
-            sources.select(F.col("id"), F.lit(0).alias("level"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        levels = [frontier]
-        visited_ids = frontier.select("id")
-        visited_owned = None  # last consolidation checkpoint (loop-private)
-        pending = 0
-        for level in range(1, max_iters + 1):
-            # frontier size observed free on the checkpoint action —
-            # replaces the per-level isEmpty() job.
-            nxt, nsig = _checkpoint_observed(
-                e.join(frontier.select(F.col("id").alias("src")), "src")
-                .select(F.col("dst").alias("id"))
-                .distinct()
-                .join(visited_ids, "id", "left_anti")
-                .select("id", F.lit(level).alias("level")),
-                n=F.count(F.lit(1)),
-            )
-            if not (nsig["n"] or 0):
-                release(nxt)
-                break
-            levels.append(nxt)
-            visited_ids = visited_ids.unionByName(nxt.select("id"))
-            pending += 1
-            if pending >= _VISITED_CONSOLIDATE:
-                new_visited = visited_ids.localCheckpoint(eager=True)
-                if visited_owned is not None:
-                    release(visited_owned)
-                visited_owned = visited_ids = new_visited
-                pending = 0
-            frontier = nxt
-        if visited_owned is not None:
-            release(visited_owned)  # loop-private; levels holds the result
-        return reduce(lambda a, b: a.unionByName(b), levels)
-    finally:
-        e.unpersist()
+@frontier_paced
+def tagged_bfs_levels(
+    edges: DataFrame, sources: DataFrame, max_iters: int = 1000, directed: bool = True
+) -> DataFrame:
+    """Independent BFS per tag of *sources* (id, tag) in ONE level loop →
+    (id, tag, level): k landmark walks cost one join per level, not k."""
+    return _bfs_levels(edges, sources, max_iters, directed, ["id", "tag"])
 
 
 @frontier_paced
 def connected_components(
     vertices: DataFrame, edges: DataFrame, max_iters: int = 100
 ) -> DataFrame:
-    """(id, component) where component = min vertex id in the component.
-
-    Min-label propagation: labels start as own id; each round every vertex
-    takes the min of its own and its neighbors' labels. Rounds are one
-    shuffle each (join on src + groupBy dst); terminates when no label
-    changes. For high-diameter graphs the large-star/small-star variant
-    halves round count — not needed for the layered graphs here.
-    """
+    """(id, component = min vertex id) by min-label propagation: each round
+    every vertex takes the min of its own and its neighbors' labels."""
     e = _src_partitioned(undirected(edges)).persist()
-    labels = vertices.select(
-        F.col("id"), F.col("id").alias("component")
-    ).localCheckpoint(eager=True)
 
     def _step(lbl: DataFrame) -> DataFrame:
         neighbor_min = (
@@ -228,220 +275,102 @@ def connected_components(
             ).alias("component"),
         )
 
-    it = 0
-    while it < max_iters:
-        # _ROUND_FOLD min-label rounds composed into one checkpoint job.
-        # Old and new label sit side by side in the LAST half's update
-        # join, so the changed-count is an aggregate of the frame the
-        # fold checkpoints anyway — observed for free on the checkpoint
-        # action. Labels are monotone (only ever decrease): the last
-        # half changing nothing proves the fixpoint was reached, and any
-        # earlier half's change is already folded into the frame.
-        fold = min(_ROUND_FOLD, max_iters - it)
-        updated = _step(labels)
-        for _ in range(fold - 1):
-            updated = _step(updated.select("id", "component"))
-        obs = Observation()
-        new_labels = (
-            updated.observe(
-                obs,
-                F.sum((F.col("component") != F.col("__old")).cast("long")).alias(
-                    "changed"
-                ),
-            )
-            .select("id", "component")
-            .localCheckpoint(eager=True)
-        )
-        changed = obs.get["changed"]
-        release(labels)
-        labels = new_labels
-        it += fold
-        if not changed:
-            break
-    e.unpersist()
-    return labels
+    try:
+        labels = vertices.select(
+            F.col("id"), F.col("id").alias("component")
+        ).localCheckpoint(eager=True)
+        # The last step's old and new labels sit side by side, so the
+        # changed-count rides the checkpoint. Labels only decrease: the
+        # last step changing nothing proves the fixpoint.
+        changed = F.sum((F.col("component") != F.col("__old")).cast("long"))
+        return _fixpoint(
+            labels,
+            _step,
+            max_iters,
+            {"changed": changed},
+            converged=lambda _prev, cur: not cur[1]["changed"],
+        )[0]
+    finally:
+        e.unpersist()
 
 
 @frontier_paced
 def connected_components_star(
-    vertices: DataFrame,
-    edges: DataFrame,
-    max_iters: int = 50,
-    delta_frontier: bool = False,
+    vertices: DataFrame, edges: DataFrame, max_iters: int = 50
 ) -> tuple[DataFrame, int]:
-    """(labels, rounds): large-star/small-star alternation — the
-    high-diameter scale path for connected components (O(log² n) rounds
-    versus O(diameter) for plain min-label propagation; Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14 — public
-    algorithm, re-expressed as DataFrame aggregations).
+    """(labels (id, component = min id), rounds) by large-star/small-star
+    alternation (Kiveris et al., SoCC'14): O(log² n) rounds where
+    min-label propagation needs O(diameter). Large-star re-points every
+    neighbor v > u to min(Γ(u) ∪ {u}); small-star every v ≤ u (and u) to
+    min(Γ⁻(u) ∪ {u}); the stable edge set is one star per component.
 
-    Each half-round is one groupBy(min) + one join — same shuffle budget
-    per round as label propagation, but a 1000-diameter chain finishes in
-    ~10 rounds instead of ~1000. Returns (id, component) with component =
-    min vertex id, plus the round count (observability for choosing the
-    propagation variant).
-
-    Large-star: every neighbor v > u re-points to m = min(Γ(u) ∪ {u}).
-    Small-star: every neighbor v ≤ u (plus u) re-points to
-    m = min(Γ⁻(u) ∪ {u}). Alternate until the edge set is stable; the
-    stable state is a star per component rooted at its min id.
-
-    *delta_frontier* (round-11, default off): per round, run the two
-    star rewrites only on edges within TWO hops of a vertex whose
-    adjacency changed last round (one large∘small round moves
-    information at most two hops, so edges farther out reproduce
-    themselves — they pass through unchanged). Converged regions then
-    skip the star joins while stragglers finish. The bookkeeping costs
-    ~5 extra narrow shuffles of the edge list per round (two anti-join
-    diffs, two semi-join dilations, one incident split), so the switch
-    pays only when a large stable fraction persists across many rounds.
-    Measured (round-11, local[32]): on the DESIGNED-FAVORABLE mixture —
-    a 1M-vertex path (21 rounds) plus 200k triangle blobs that converge
-    in round 1 and should freeze — the variant is a documented NO-WIN:
-    identical components and round count, 164–180 s vs 40–46 s plain.
-    Two reasons: the bookkeeping is ~8 extra shuffles × 21 rounds, and
-    star-CC contracts the chain so aggressively that most edges stay
-    within two hops of a change until their own convergence (the stable
-    fraction the filter needs never materializes). Kept as a tested
-    opt-in; OFF on the registered query and stress paths. Components
-    are bit-identical either way (tested on path/mixed/star fixtures).
+    Each half is its own checkpoint. Measured and removed: fusing the
+    halves (+11% shuffle write, +39% read; plans/r17/pregel_fold_ab.md)
+    and rewriting only edges near last round's changes (164–180 s vs
+    40–46 s; SCALE_STRESS_r11.json).
     """
     ids = vertices.select(F.col("id").cast("long").alias("id")).distinct()
     # hash-sum as DECIMAL: exact, order-independent, and immune to the
     # ANSI-mode long-overflow a bigint sum of xxhash64 values hits.
-    _sig = dict(
+    signature = dict(
         n=F.count(F.lit(1)),
         h=F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
     )
-    e, esig = _checkpoint_observed(
+    e, sig = _checkpoint(
         edges.select(F.col("src").cast("long").alias("a"), F.col("dst").cast("long").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
         .distinct(),
-        **_sig,
+        signature,
     )
-    rounds = 0
-    frontier = None  # (vid) vertices whose adjacency changed last round
+    scratch: list[DataFrame] = []
 
-    def _incident(edge_df: DataFrame, vset: DataFrame) -> DataFrame:
-        return edge_df.join(
-            vset.withColumnRenamed("vid", "u"), "u", "left_semi"
-        ).unionByName(
-            edge_df.join(vset.withColumnRenamed("vid", "v"), "v", "left_semi")
-        ).distinct()
-
-    def _endpoints(edge_df: DataFrame) -> DataFrame:
-        return (
-            edge_df.select(F.col("u").alias("vid"))
-            .unionByName(edge_df.select(F.col("v").alias("vid")))
-            .distinct()
+    def _round(e: DataFrame) -> DataFrame:
+        nbr = e.select("u", "v").unionByName(
+            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
-
-    for _ in range(max_iters):
-        rounds += 1
-        if delta_frontier and frontier is not None:
-            # active region = edges within 2 hops of last round's changes
-            act_v = frontier
-            for _h in range(2):
-                act_v = _endpoints(_incident(e, act_v))
-            act = _incident(e, act_v).localCheckpoint(eager=True)
-            stable = e.join(act, ["u", "v"], "left_anti")
-        else:
-            act, stable = e, None
-        # -- large-star: full neighborhood Γ(u) ∪ {u}, re-point v > u to min
-        nbr = act.select("u", "v").unionByName(
-            act.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        mmin = nbr.groupBy("u").agg(
+            F.least(F.min("v"), F.first("u")).alias("m")  # min(Γ(u) ∪ {u})
         )
-        mmin = (
-            nbr.groupBy("u")
-            .agg(F.least(F.min("v"), F.first("u")).alias("m"))  # min(Γ(u) ∪ {u})
-        )
-        # shuffle_hash: the un-hinted plan is a SortMergeJoin that sorts
-        # BOTH sides — 2|E| rows re-sorted every half-round was the
-        # measured 30× sort-pressure floor (SCALE_STRESS_r08 cc_star
-        # 30×/10× = 4.11 on 3× data while shuffle bytes stayed linear).
-        # The build side is the per-vertex min table (|V| rows, shrinks
-        # with partition count on a real cluster), so the hash build is
-        # bounded; the probe side streams unsorted.
+        # shuffle_hash: the un-hinted SortMergeJoin re-sorts 2|E| rows per
+        # half-round — the measured 30× sort-pressure floor
+        # (SCALE_STRESS_r08). The build side is the |V|-row min table.
         large = (
             nbr.join(mmin.hint("shuffle_hash"), "u")
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("x"), F.col("m"))
         )
-        # Large- and small-star halves composed into ONE checkpoint job
-        # per round (round 17, §2.6) — e1 used to be its own eager
-        # localCheckpoint, i.e. a second driver-blocking job every
-        # round. Lazy, its subtree feeds the small star's three
-        # consumers through the same Exchange(u) (ReuseExchange
-        # deduplicates them — verified in the committed plan), so the
-        # large star still computes once per round.
         e1 = (
             large.filter(F.col("x") != F.col("m"))
             .select(F.greatest("x", "m").alias("u"), F.least("x", "m").alias("v"))
             .distinct()
+            .localCheckpoint(eager=True)
         )
-        e1_owned = None
-        if _STAR_FUSE_HALF_ROUNDS:
-            # Pin the fused intermediate to hashpartitioning(u): the
-            # small star's three consumers (probe, min-table, its union
-            # branch) all require u-distribution, so they dedupe onto
-            # this ONE exchange via ReuseExchange and the large star
-            # computes once per round. Without it each consumer plans
-            # its own Exchange over the lazy subtree and re-runs the
-            # large star — measured SLOWER than the old two-checkpoint
-            # round (ab_fold.py: cc_star 3.35 vs 3.08).
-            e1 = e1.repartition("u")
-        else:
-            e1_owned = e1 = e1.localCheckpoint(eager=True)
-        # -- small-star: Γ⁻(u) ∪ {u} (v < u side), re-point all to its min
-        low = e1.select("u", "v")  # already oriented u > v
-        msmall = low.groupBy("u").agg(F.min("v").alias("m"))
+        scratch.append(e1)
+        msmall = e1.groupBy("u").agg(F.min("v").alias("m"))  # min(Γ⁻(u) ∪ {u})
         small = (
-            low.join(msmall.hint("shuffle_hash"), "u")  # same sort-free shape
+            e1.join(msmall.hint("shuffle_hash"), "u")
             .select(F.col("v").alias("x"), "m")
             .unionByName(msmall.select(F.col("u").alias("x"), "m"))
         )
-        rewritten = (
+        return (
             small.filter(F.col("x") != F.col("m"))
             .select(F.greatest("x", "m").alias("u"), F.least("x", "m").alias("v"))
             .distinct()
         )
-        e2, e2sig = _checkpoint_observed(
-            rewritten if stable is None else rewritten.unionByName(stable).distinct(),
-            **_sig,
+
+    def _stable(prev: tuple, cur: tuple) -> bool:
+        # A signature mismatch proves change for free; a match may be a
+        # hash-sum collision, so confirm it with one exact semi-join:
+        # distinct sets of equal size are equal iff one contains the other.
+        (old, old_sig), (new, new_sig) = prev, cur
+        return new_sig == old_sig and new_sig["n"] == (
+            new.join(old, ["u", "v"], "left_semi").count()
         )
-        if delta_frontier:
-            # next round's frontier: endpoints of the symmetric edge diff
-            prev_frontier = frontier
-            frontier = _endpoints(
-                e2.join(e, ["u", "v"], "left_anti").unionByName(
-                    e.join(e2, ["u", "v"], "left_anti")
-                )
-            ).localCheckpoint(eager=True)
-            if prev_frontier is not None:
-                release(prev_frontier)
-            if stable is not None:  # act is its own checkpoint, not e
-                release(act)
-        # Convergence = edge-set fixpoint. The (count, xxhash64-sum)
-        # signature rides the checkpoint action (free); a signature
-        # mismatch PROVES change, so the round continues with zero extra
-        # jobs — previously this was two exceptAll shuffles every round.
-        # Signatures matching doesn't prove equality (hash-sum collision),
-        # so only then pay one exact semi-join: distinct sets of equal
-        # size are equal iff one is contained in the other.
-        if (e2sig["n"] or 0) == (esig["n"] or 0) and e2sig["h"] == esig["h"]:
-            changed = (
-                e2sig["n"] or 0
-            ) != e2.join(e, ["u", "v"], "left_semi").count()
-        else:
-            changed = True
-        release(e)
-        if e1_owned is not None:
-            release(e1_owned)
-        e, esig = e2, e2sig
-        if not changed:
-            break
-    # Stable stars: (u > v) edges point members at their component root.
+
+    e, rounds = _fixpoint(
+        e, _round, max_iters, signature, sig, _stable, fold=False, scratch=scratch
+    )
     labels = (
         ids.join(e.select(F.col("u").alias("id"), F.col("v").alias("root")), "id", "left")
         .groupBy("id")
@@ -457,33 +386,16 @@ def shortest_paths(
     max_iters: int = 50,
     weight_col: str = "weight",
 ) -> DataFrame:
-    """Weighted single/multi-source shortest paths → (id, dist).
-
-    Synchronous Bellman-Ford: each round relaxes every edge out of the
-    current distance frontier in ONE join + min-aggregate (both shuffles
-    hash-partitioned on vertex id; partial mins combine map-side).
-    Terminates when a round improves no distance — ≤ |V|-1 rounds, in
-    practice O(weighted diameter). Lineage is truncated per round with
-    localCheckpoint (Catalyst has no recursion).
-    """
+    """Weighted single/multi-source shortest paths → (id, dist) by
+    synchronous Bellman-Ford: one join + min-aggregate per round, until a
+    round improves nothing."""
     e = _src_partitioned(
         edges.select("src", "dst", F.col(weight_col).cast("double").alias("w"))
     ).persist()
-    # Monotone convergence signature, observed free on each round's
-    # checkpoint: per-id dist only ever decreases and ids are only ever
-    # added, so (count, Σdist) is unchanged iff the whole frame is
-    # unchanged. The sum is a DECIMAL cast — exact and summation-order
-    # independent, where a double sum could wobble an ULP between rounds
-    # and stall termination. Replaces the old new⋈old comparison job.
-    _sig = dict(
-        n=F.count(F.lit(1)), s=F.sum(F.col("dist").cast("decimal(38,15)"))
-    )
-    dist, dsig = _checkpoint_observed(
-        sources.select(F.col("id"), F.lit(0.0).alias("dist"))
-        .groupBy("id")
-        .agg(F.min("dist").alias("dist")),
-        **_sig,
-    )
+    # Monotone signature: dists only decrease and ids are only added, so
+    # (count, Σdist) is unchanged iff the frame is. DECIMAL keeps the sum
+    # exact and order-independent (a double could wobble an ULP).
+    signature = dict(n=F.count(F.lit(1)), s=F.sum(F.col("dist").cast("decimal(38,15)")))
 
     def _relax(d: DataFrame) -> DataFrame:
         relaxed = (
@@ -493,30 +405,55 @@ def shortest_paths(
         return d.unionByName(relaxed).groupBy("id").agg(F.min("dist").alias("dist"))
 
     try:
-        it = 0
-        while it < max_iters:
-            # _ROUND_FOLD relaxations composed into one checkpoint job
-            # (round 17, §2.6). Bit-exact: min is order-independent and
-            # each relaxation's arithmetic is unchanged — only the
-            # materialization points move. The signature stays a valid
-            # fold-granularity fixpoint test because it is monotone
-            # transitively (dist per id only ever decreases, ids are only
-            # ever added): unchanged across a 2-round fold proves neither
-            # round changed, and post-fixpoint relaxations are identities.
-            fold = min(_ROUND_FOLD, max_iters - it)
-            upd = dist
-            for _ in range(fold):
-                upd = _relax(upd)
-            new_dist, nsig = _checkpoint_observed(upd, **_sig)
-            release(dist)
-            dist, improved = new_dist, nsig != dsig
-            dsig = nsig
-            it += fold
-            if not improved:
-                break
-        return dist
+        dist, sig = _checkpoint(
+            sources.select(F.col("id"), F.lit(0.0).alias("dist"))
+            .groupBy("id")
+            .agg(F.min("dist").alias("dist")),
+            signature,
+        )
+        return _fixpoint(dist, _relax, max_iters, signature, sig)[0]
     finally:
         e.unpersist()
+
+
+def _pagerank(
+    vertices: DataFrame,
+    edges: DataFrame,
+    n_iters: int,
+    damping: float,
+    seeds: DataFrame | None = None,
+) -> DataFrame:
+    out_deg = edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
+    e = _src_partitioned(
+        edges.select("src", "dst").join(out_deg.withColumnRenamed("id", "src"), "src")
+    ).persist()
+    v = vertices.select("id").distinct().persist()
+    if seeds is None:
+        base, rank0, teleport = v, F.lit(1.0), F.lit(1.0 - damping)
+    else:
+        base = v.join(F.broadcast(seeds.select("id").withColumn("b", F.lit(1.0))), "id", "left")
+        base = base.select("id", F.coalesce(F.col("b"), F.lit(0.0)).alias("base")).persist()
+        rank0, teleport = F.col("base"), F.lit(1.0 - damping) * F.col("base")
+
+    def _iter(r: DataFrame) -> DataFrame:
+        contribs = (
+            e.join(r.withColumnRenamed("id", "src"), "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum(F.col("rank") / F.col("deg")).alias("msum"))
+        )
+        return base.join(contribs, "id", "left").select(
+            "id",
+            (teleport + F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))).alias("rank"),
+        )
+
+    try:
+        ranks = base.select("id", rank0.alias("rank")).localCheckpoint(eager=True)
+        return _fixpoint(ranks, _iter, n_iters)[0]
+    finally:
+        e.unpersist()
+        v.unpersist()
+        if seeds is not None:
+            base.unpersist()
 
 
 @frontier_paced
@@ -526,211 +463,11 @@ def pagerank(
     n_iters: int = 10,
     damping: float = 0.85,
 ) -> DataFrame:
-    """Fixed-iteration PageRank → (id, rank).
-
-    Simple power method with rank(d) = (1-α) + α·Σ rank(s)/outdeg(s)
-    (per-vertex base form, no dangling-mass redistribution — dangling
-    vertices keep contributing nothing, matching the classic formulation
-    the DuckDB recursive-CTE oracle reproduces). Each round: one
-    broadcast-or-shuffle join of ranks onto edges + one sum-agg keyed on
-    dst (map-side combinable), then a left join back onto the vertex set
-    so rankless vertices hold the base rank. Fixed iteration count keeps
-    replay deterministic.
-    """
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
-    e = _src_partitioned(
-        edges.select("src", "dst").join(out_deg.withColumnRenamed("id", "src"), "src")
-    ).persist()
-    v = vertices.select("id").distinct().persist()
-    ranks = v.select("id", F.lit(1.0).alias("rank")).localCheckpoint(eager=True)
-
-    def _iter(r: DataFrame) -> DataFrame:
-        contribs = (
-            e.join(r.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("rank") / F.col("deg")).alias("msum"))
-        )
-        return v.join(contribs, "id", "left").select(
-            "id",
-            (
-                F.lit(1.0 - damping)
-                + F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))
-            ).alias("rank"),
-        )
-
-    try:
-        # _ROUND_FOLD power iterations composed per checkpoint job (round
-        # 17, §2.6): the iteration count is fixed, so folding only moves
-        # the materialization points — every round's arithmetic (and its
-        # per-key double-sum grouping) is the identical expression tree,
-        # so ranks are bit-identical to the unfolded loop's.
-        i = 0
-        while i < n_iters:
-            fold = min(_ROUND_FOLD, n_iters - i)
-            upd = ranks
-            for _ in range(fold):
-                upd = _iter(upd)
-            new_ranks = upd.localCheckpoint(eager=True)
-            release(ranks)
-            ranks = new_ranks
-            i += fold
-        return ranks
-    finally:
-        e.unpersist()
-        v.unpersist()
-
-
-@frontier_paced
-def kcore(edges: DataFrame, k: int, max_iters: int = 50) -> tuple[DataFrame, int]:
-    """The k-core: the maximal subgraph in which every vertex has degree
-    >= k (over the undirected, deduplicated edge view). Returns
-    ((id, degree) of surviving vertices with their in-core degree, rounds).
-
-    Iterative peeling — the textbook algorithm, set-oriented: each round
-    computes every remaining vertex's degree in ONE groupBy over the
-    surviving edges (map-side-combinable count), drops vertices below k,
-    then semi-joins edges to survivors on both endpoints. Terminates when
-    a round drops nobody; ≤ |V| rounds in theory, a handful in practice
-    (each round removes a whole "shell" layer, not one vertex — the
-    peeling cascade depth, typically ≤ 10 even on power-law graphs).
-
-    Scale: state per round is the surviving edge list, hash-partitioned by
-    the groupBy/joins; degrees are (id, count) — fixed width. Lineage is
-    truncated per round with localCheckpoint (Catalyst has no recursion).
-    No reference analogue (getStats' BFS, Graph.hs:82-118, is the only
-    whole-graph pass there); included for parity with GraphX-style
-    analytics suites.
-    """
-    e, esig = _checkpoint_observed(
-        undirected(edges).filter(F.col("src") != F.col("dst")).distinct(),
-        n=F.count(F.lit(1)),
-    )
-
-    def _peel(edge_df: DataFrame, probe: DataFrame | None = None) -> DataFrame:
-        """One peel. *probe* (when given) is an observed twin of
-        *edge_df* used ONLY as the semi-joins' streamed side — that path
-        executes exactly once per action, so a CollectMetrics there
-        counts the peel's input rows exactly. Attaching the observation
-        to edge_df itself would triple-count: the frame also feeds the
-        degree aggregate behind both semi-join build sides."""
-        deg = edge_df.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("degree"))
-        survivors = deg.filter(F.col("degree") >= k)
-        return (
-            (probe if probe is not None else edge_df)
-            .join(survivors.select(F.col("id").alias("src")), "src", "left_semi")
-            .join(survivors.select(F.col("id").alias("dst")), "dst", "left_semi")
-        )
-
-    rounds = 0
-    n_edges = esig["n"] or 0
-    while rounds < max_iters:
-        # _ROUND_FOLD peels composed into one checkpoint job (round 17,
-        # §2.6). The logical round count stays EXACT (tests pin it, and
-        # the unrolled kcore oracle's validity is asserted through it):
-        # every intermediate peel's output count is observed on the next
-        # peel's probe path, so the fold yields the same per-peel count
-        # sequence the unfolded loop saw, replayed below. Edge count is
-        # monotone ↓, so an unchanged count proves a peel was identity —
-        # any extra peels a fold runs past convergence reproduce the
-        # same edge set and the returned frame is bit-identical.
-        fold = min(_ROUND_FOLD, max_iters - rounds)
-        cur = e
-        inner_obs: list[tuple[Observation, DataFrame]] = []
-        for _ in range(fold - 1):
-            cur = _peel(cur)
-            obs = Observation()
-            probe = cur.observe(obs, F.count(F.lit(1)).alias("n"))
-            inner_obs.append((obs, cur))
-            cur = _peel(cur, probe=probe)
-        if fold == 1:
-            cur = _peel(cur)
-        new_e, nsig = _checkpoint_observed(cur, n=F.count(F.lit(1)))
-        counts = []
-        for obs, mid in inner_obs:
-            try:
-                counts.append(obs.get["n"] or 0)
-            except Exception:
-                # AQE's empty-relation propagation collapsed the join the
-                # probe streamed through (the fold ended empty), taking
-                # the mid-plan CollectMetrics with it — getRow() then
-                # yields a schemaless empty row and toPyRow raises.
-                # Recompute the one missing count from the still-lazy
-                # intermediate (e is not yet released); only terminal,
-                # near-empty folds ever take this path.
-                counts.append(mid.count())
-        counts.append(nsig["n"] or 0)
-        release(e)
-        e = new_e
-        converged = False
-        for n_new in counts:
-            rounds += 1
-            if n_new == n_edges:
-                converged = True
-                break
-            n_edges = n_new
-        if converged:
-            break
-    out = (
-        e.groupBy(F.col("src").alias("id"))
-        .agg(F.count("*").alias("degree"))
-        .filter(F.col("degree") >= k)
-    )
-    return out, rounds
-
-
-@frontier_paced
-def label_propagation(edges: DataFrame, n_iters: int = 4) -> DataFrame:
-    """Synchronous label-propagation community detection → (id, label).
-
-    Every vertex starts as its own community; each round, every vertex
-    simultaneously adopts the most frequent label among its neighbors
-    (undirected view), ties broken by the smallest label — the
-    deterministic variant of Raghavan et al.'s LPA (random tie-breaks
-    don't replay). Fixed iteration count: LPA has no convergence
-    guarantee under synchronous updates (bipartite oscillation), so a
-    fixed budget is the standard, replay-safe formulation — and is what
-    the unrolled SQL oracle mirrors.
-
-    Each round is one join (labels onto edges), one (dst, label) count —
-    map-side combinable — and one deterministic argmax via min over a
-    window-free groupBy trick: max_by(struct) ordering on
-    (cnt DESC, label ASC) folded as max(struct(cnt, -label)). Isolated
-    vertices keep their label via the left join. Lineage truncated per
-    round (Catalyst has no recursion).
-    """
-    e = undirected(edges).filter(F.col("src") != F.col("dst")).distinct()
-    e = e.localCheckpoint(eager=True)
-    v = e.select(F.col("src").alias("id")).distinct()
-    labels = v.select("id", F.col("id").alias("label")).localCheckpoint(eager=True)
-
-    def _round(lbl: DataFrame) -> DataFrame:
-        neigh = e.join(lbl.withColumnRenamed("id", "src"), "src")
-        counted = neigh.groupBy(F.col("dst").alias("id"), "label").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        # deterministic argmax: max over (cnt, -label) picks highest count,
-        # then smallest label — a single max-agg, no window shuffle.
-        best = counted.groupBy("id").agg(
-            F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))).alias("m")
-        )
-        return lbl.join(best, "id", "left").select(
-            "id",
-            F.coalesce(-F.col("m.nl"), F.col("label")).alias("label"),
-        )
-
-    # Fixed-count folding (round 17, §2.6): counts and the struct-max
-    # argmax are order-independent, so folded rounds are bit-identical.
-    i = 0
-    while i < n_iters:
-        fold = min(_ROUND_FOLD, n_iters - i)
-        upd = labels
-        for _ in range(fold):
-            upd = _round(upd)
-        new_labels = upd.localCheckpoint(eager=True)
-        release(labels)
-        labels = new_labels
-        i += fold
-    return labels
+    """Fixed-iteration PageRank → (id, rank), rank(d) = (1-α) + α·Σ
+    rank(s)/outdeg(s) without dangling-mass redistribution (as the DuckDB
+    oracle computes it): per round one join onto edges, one sum keyed on
+    dst, and a left join back so rankless vertices keep the base rank."""
+    return _pagerank(vertices, edges, n_iters, damping)
 
 
 @frontier_paced
@@ -741,112 +478,69 @@ def personalized_pagerank(
     n_iters: int = 5,
     damping: float = 0.85,
 ) -> DataFrame:
-    """Personalized PageRank → (id, rank): the random walk teleports back
-    to the *seed set* instead of everywhere, so rank mass concentrates in
-    the seeds' neighborhoods — the similarity/recommendation primitive
-    (seeds = a user's items → ranked related nodes).
-
-    rank(v) = (1-α)·1[v ∈ seeds] + α·Σ rank(s)/outdeg(s). Same plan shape
-    as pagerank (one join + one map-side-combinable sum per round, lineage
-    truncated); only the base vector differs. *seeds* is (id) and is
-    expected tiny — it broadcasts into the per-round left join.
-    """
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
-    e = _src_partitioned(
-        edges.select("src", "dst").join(out_deg.withColumnRenamed("id", "src"), "src")
-    ).persist()
-    v = vertices.select("id").distinct().persist()
-    base = v.join(F.broadcast(seeds.select("id").withColumn("b", F.lit(1.0))), "id", "left")
-    base = base.select("id", F.coalesce(F.col("b"), F.lit(0.0)).alias("base")).persist()
-    ranks = base.select("id", F.col("base").alias("rank")).localCheckpoint(eager=True)
-
-    def _iter(r: DataFrame) -> DataFrame:
-        contribs = (
-            e.join(r.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("rank") / F.col("deg")).alias("msum"))
-        )
-        return base.join(contribs, "id", "left").select(
-            "id",
-            (
-                F.lit(1.0 - damping) * F.col("base")
-                + F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))
-            ).alias("rank"),
-        )
-
-    try:
-        # Fixed-count folding, same reasoning as pagerank (round 17, §2.6).
-        i = 0
-        while i < n_iters:
-            fold = min(_ROUND_FOLD, n_iters - i)
-            upd = ranks
-            for _ in range(fold):
-                upd = _iter(upd)
-            new_ranks = upd.localCheckpoint(eager=True)
-            release(ranks)
-            ranks = new_ranks
-            i += fold
-        return ranks
-    finally:
-        e.unpersist()
-        v.unpersist()
-        base.unpersist()
+    """Personalized PageRank → (id, rank): pagerank teleporting to the
+    (tiny, broadcast) *seed set*, rank(v) = (1-α)·1[v ∈ seeds] + α·Σ
+    rank(s)/outdeg(s) — the similarity/recommendation primitive."""
+    return _pagerank(vertices, edges, n_iters, damping, seeds)
 
 
 @frontier_paced
-def tagged_bfs_levels(
-    edges: DataFrame, sources: DataFrame, max_iters: int = 1000, directed: bool = True
-) -> DataFrame:
-    """Independent BFS per tag in ONE loop → (id, tag, level).
+def kcore(edges: DataFrame, k: int, max_iters: int = 50) -> tuple[DataFrame, int]:
+    """The k-core — the maximal subgraph where every vertex has degree >= k
+    (undirected, deduplicated) → ((id, in-core degree), rounds). Each peel
+    is one degree groupBy plus semi-joins of the edges to the survivors,
+    until a peel drops nobody; the round count is exact per peel."""
 
-    *sources* is (id, tag): each tag's walk starts at its own seed set,
-    and the visited/frontier state is keyed (id, tag) — k landmark walks
-    cost one frontier join per LEVEL total, not per landmark (the
-    landmark-distance-oracle build primitive). Same per-level discipline
-    as bfs_levels, including the every-8th-level visited consolidation
-    (see bfs_levels — the level frames are already checkpointed, so the
-    visited set is a lazy union over those scans between
-    consolidations)."""
-    from functools import reduce
-
-    e = _src_partitioned(
-        edges.select("src", "dst") if directed else undirected(edges)
-    ).persist()
-    try:
-        frontier = (
-            sources.select("id", "tag")
-            .distinct()
-            .select("id", "tag", F.lit(0).alias("level"))
-            .localCheckpoint(eager=True)
+    def _peel(edge_df: DataFrame, probe: DataFrame | None = None) -> DataFrame:
+        # *probe* is the semi-joins' streamed side only: that path runs
+        # once per action, where edge_df also feeds both build sides
+        # through the degree aggregate and would count three times.
+        deg = edge_df.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("degree"))
+        survivors = deg.filter(F.col("degree") >= k)
+        return (
+            (probe if probe is not None else edge_df)
+            .join(survivors.select(F.col("id").alias("src")), "src", "left_semi")
+            .join(survivors.select(F.col("id").alias("dst")), "dst", "left_semi")
         )
-        levels = [frontier]
-        visited = frontier.select("id", "tag")
-        visited_owned = None
-        pending = 0
-        for level in range(1, max_iters + 1):
-            nxt, nsig = _checkpoint_observed(
-                e.join(frontier.select(F.col("id").alias("src"), "tag"), "src")
-                .select(F.col("dst").alias("id"), "tag")
-                .distinct()
-                .join(visited, ["id", "tag"], "left_anti")
-                .select("id", "tag", F.lit(level).alias("level")),
-                n=F.count(F.lit(1)),
-            )
-            if not (nsig["n"] or 0):
-                release(nxt)
-                break
-            levels.append(nxt)
-            visited = visited.unionByName(nxt.select("id", "tag"))
-            pending += 1
-            if pending >= _VISITED_CONSOLIDATE:
-                new_visited = visited.localCheckpoint(eager=True)
-                if visited_owned is not None:
-                    release(visited_owned)
-                visited_owned = visited = new_visited
-                pending = 0
-            frontier = nxt
-        if visited_owned is not None:
-            release(visited_owned)
-        return reduce(lambda a, b: a.unionByName(b), levels)
+
+    e, sig = _checkpoint(
+        undirected(edges).filter(F.col("src") != F.col("dst")).distinct(), _rows()
+    )
+    e, rounds = _fixpoint(e, _peel, max_iters, _rows(), sig, per_round=True)
+    out = (
+        e.groupBy(F.col("src").alias("id"))
+        .agg(F.count("*").alias("degree"))
+        .filter(F.col("degree") >= k)
+    )
+    return out, rounds
+
+
+@frontier_paced
+def label_propagation(edges: DataFrame, n_iters: int = 4) -> DataFrame:
+    """Synchronous label propagation → (id, label): each round every
+    vertex adopts its neighbors' most frequent label, ties to the smallest
+    (deterministic LPA, so it replays), for a fixed round count since
+    synchronous LPA may oscillate. The argmax is one max(struct(cnt,
+    -label)), no window shuffle."""
+    e = undirected(edges).filter(F.col("src") != F.col("dst")).distinct()
+    e = e.localCheckpoint(eager=True)
+    v = e.select(F.col("src").alias("id")).distinct()
+    labels = v.select("id", F.col("id").alias("label")).localCheckpoint(eager=True)
+
+    def _round(lbl: DataFrame) -> DataFrame:
+        neigh = e.join(lbl.withColumnRenamed("id", "src"), "src")
+        counted = neigh.groupBy(F.col("dst").alias("id"), "label").agg(
+            F.count(F.lit(1)).alias("cnt")
+        )
+        best = counted.groupBy("id").agg(
+            F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))).alias("m")
+        )
+        return lbl.join(best, "id", "left").select(
+            "id",
+            F.coalesce(-F.col("m.nl"), F.col("label")).alias("label"),
+        )
+
+    try:
+        return _fixpoint(labels, _round, n_iters)[0]
     finally:
-        e.unpersist()
+        release(e)  # the labels are checkpoints: nothing reads e after the loop

@@ -9,9 +9,35 @@ timestamps hash-match the DuckDB oracle).
 from __future__ import annotations
 
 import os
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def host_cpus() -> str:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return env
+    try:
+        return str(len(os.sched_getaffinity(0)))
+    except AttributeError:  # no affinity API on this platform
+        return str(os.cpu_count() or 1)
+
+
+def driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half the host's physical memory
+    (MemTotal), capped at 48g: a fixed 48g heap lets the JVM outgrow a
+    smaller host until the kernel kills it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf: keep the cap
+        return "48g"
+    return f"{max(1, min(48, total // 2 // 2**30))}g"
 
 
 def get_spark(
@@ -20,7 +46,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or host_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(max(int(cpus), 8))))
     builder = (
@@ -32,7 +58,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
@@ -66,6 +92,12 @@ def get_spark(
 
 _INITIAL_PARTITIONS_KEY = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
+#: session id → [holders, saved initialPartitionNum or None]. Process-wide
+#: because the conf it guards is shared by every caller of a session;
+#: _CAP_LOCK makes overlapping capped sections restore the value exactly.
+_CAPS: dict = {}
+_CAP_LOCK = threading.Lock()
+
 
 @contextmanager
 def capped_initial_partitions(spark, n: int | None = None):
@@ -83,23 +115,33 @@ def capped_initial_partitions(spark, n: int | None = None):
     actions and restore the session value on exit; queries returned
     lazily to callers still execute under the wide session default.
 
-    The conf is session-global while held: a concurrent query on the
-    same session during a capped loop would execute at the capped width
-    (slower on huge shuffles, never incorrect)."""
-    n = n or spark.sparkContext.defaultParallelism
-    prev = None
-    try:
-        prev = spark.conf.get(_INITIAL_PARTITIONS_KEY)
-    except Exception:  # noqa: BLE001 — unset key
-        prev = None
-    spark.conf.set(_INITIAL_PARTITIONS_KEY, str(n))
+    The cap is reference-counted per session: the first section to
+    enter saves the session value and sets the cap, nested and
+    concurrent sections only join it, and the last to leave restores
+    the saved value. The conf is session-global while held: a concurrent
+    query on the same session during a capped loop executes at the
+    capped width (slower on huge shuffles, never incorrect)."""
+    key = spark._jsparkSession.sessionUUID()
+    with _CAP_LOCK:
+        held = _CAPS.get(key)
+        if held is None:
+            prev = spark.conf.get(_INITIAL_PARTITIONS_KEY, None)
+            spark.conf.set(
+                _INITIAL_PARTITIONS_KEY, str(n or spark.sparkContext.defaultParallelism)
+            )
+            held = _CAPS[key] = [0, prev]
+        held[0] += 1
     try:
         yield
     finally:
-        if prev is None:
-            spark.conf.unset(_INITIAL_PARTITIONS_KEY)
-        else:
-            spark.conf.set(_INITIAL_PARTITIONS_KEY, prev)
+        with _CAP_LOCK:
+            held[0] -= 1
+            if not held[0]:
+                del _CAPS[key]
+                if held[1] is None:
+                    spark.conf.unset(_INITIAL_PARTITIONS_KEY)
+                else:
+                    spark.conf.set(_INITIAL_PARTITIONS_KEY, held[1])
 
 
 def frontier_paced(fn):
@@ -107,10 +149,11 @@ def frontier_paced(fn):
     family: finds the first DataFrame argument and runs the wrapped
     driver loop under the capped width.
 
-    Scope contract (round-15 ADVICE clarification): the cap covers only
-    work EXECUTED inside the call. Every decorated pregel function
-    (bfs_levels / tagged_bfs_levels / connected_components_star / sssp /
-    pagerank / kcore) checkpoints each round's state eagerly inside the
+    Scope contract: the cap covers only work EXECUTED inside the call.
+    Every decorated pregel function (bfs_levels, tagged_bfs_levels,
+    connected_components, connected_components_star, shortest_paths,
+    pagerank, personalized_pagerank, kcore, label_propagation)
+    checkpoints each round's state eagerly inside the
     loop — the iterative stages, which are the cap's entire target,
     therefore always run capped. What a decorated function RETURNS is a
     frame over those localCheckpoint cuts plus at most a final
@@ -120,7 +163,8 @@ def frontier_paced(fn):
     possibly corpus-sized, exactly what the wide default exists for. A
     concurrent query on the same session during a capped loop executes
     at the capped width (slower on huge shuffles, never incorrect) — the
-    documented price of session-global conf."""
+    documented price of session-global conf. Nested calls share the
+    outermost cap (see capped_initial_partitions)."""
     import functools
 
     @functools.wraps(fn)

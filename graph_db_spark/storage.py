@@ -41,6 +41,7 @@ import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graph_db_spark.graph import EVENT_SCHEMA, GraphSession, GraphSnapshot
@@ -159,12 +160,18 @@ def _norm_location(p: str) -> str:
 
 
 def _table_location(spark, name: str) -> str | None:
-    try:
-        for row in spark.sql(f"DESCRIBE FORMATTED `{name}`").collect():
-            if (row.col_name or "").strip() == "Location":
-                return (row.data_type or "").strip()
-    except Exception:  # noqa: BLE001 — missing table / no catalog
+    """Catalog Location of table *name*; None when it does not exist.
+    Probed with tableExists first: DESCRIBE on a missing table logs a
+    JVM TABLE_OR_VIEW_NOT_FOUND error and stack trace on every call."""
+    if not spark.catalog.tableExists(name):
         return None
+    try:
+        rows = spark.sql(f"DESCRIBE FORMATTED `{name}`").collect()
+    except AnalysisException:  # dropped since the probe
+        return None
+    for row in rows:
+        if (row.col_name or "").strip() == "Location":
+            return (row.data_type or "").strip()
     return None
 
 

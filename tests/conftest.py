@@ -36,7 +36,6 @@ _SLOW_TESTS = {
     "test_checkpoint_and_replay_suffix",
     "test_checkpoint_false_hatch_result_equivalence",
     "test_compact_log",
-    "test_connected_components_star_delta_frontier_identical",
     "test_connected_components_star_matches_naive",
     "test_crash_between_commits",
     "test_engine_matches_sequential_model",
@@ -110,7 +109,7 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    cpus = os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")
+    cpus = os.environ.get("SPARK_GRAFT_TEST_CPUS") or os.environ.get("SPARK_GRAFT_CPUS", "8")
     s = get_spark(app_name="graph_db_spark_tests", cpus=cpus, shuffle_partitions=8)
     yield s
 

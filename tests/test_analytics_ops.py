@@ -22,9 +22,9 @@ def test_bfs_visited_consolidation_boundary(spark, monkeypatch):
     visited union every _VISITED_CONSOLIDATE levels instead of every
     level) must be invisible to results. Force the interval down to 2 so
     a 7-level path crosses several consolidation boundaries — covering
-    bfs_levels, tagged_bfs_levels, AND the _reachable_on loop (which
-    imports the interval at call time) past the boundary the bundled
-    shallow fixtures never reach."""
+    bfs_levels, tagged_bfs_levels, AND the _reachable_on loop (all run
+    pregel._bfs) past the boundary the bundled shallow fixtures never
+    reach."""
     import graph_db_spark.pregel as pregel
 
     monkeypatch.setattr(pregel, "_VISITED_CONSOLIDATE", 2)
@@ -40,10 +40,9 @@ def test_bfs_visited_consolidation_boundary(spark, monkeypatch):
         for r in pregel.tagged_bfs_levels(edges, tagged).collect()
     }
     assert tg[(7, "a")] == 5 and tg[(7, "b")] == 3 and tg[(3, "a")] == 1
-    # _reachable_on has its own pending/consolidation/tail-materialization
-    # bookkeeping (graph.py) and imports the interval at call time — drive
-    # it past the boundary too (round-16 ADVICE: the docstring claimed
-    # this coverage before the case existed). 5 levels deep at interval 2
+    # _reachable_on runs the same core in its other mode (returns the
+    # consolidated visited set, releasing level frames as they fold in)
+    # — drive it past the boundary too. 5 levels deep at interval 2
     # crosses two consolidations; the reachable set must be exact.
     import graph_db_spark.graph as graph_mod
     from graph_db_spark.catalogue import catalogue_schema
@@ -1113,34 +1112,6 @@ def test_dedup_duplicate_clusters_canonicalization(spark):
     assert got[20] == 20 and got[30] == 30  # singletons stay canonical
     canon = [i for i in (10, 11, 12) if got[i] == i]
     assert canon == [10]  # exactly one canonical member per cluster
-
-
-def test_connected_components_star_delta_frontier_identical(spark):
-    """The delta-frontier variant (round-11: star rewrites restricted to
-    edges within two hops of last round's changes, stable edges carried
-    forward) produces bit-identical components on the shapes that stress
-    the frontier logic: a long chain (changes everywhere until the end),
-    a mixed graph (early-converging blobs must FREEZE while the chain
-    keeps moving — the payoff case), and stars/singletons (converge in
-    one round, frontier empties immediately)."""
-    from graph_db_spark.pregel import connected_components_star
-
-    fixtures = {
-        "chain": [(i, i + 1) for i in range(120)],
-        "mixed": [(0, 1), (1, 2), (2, 0), (10, 11), (11, 12), (20, 21)]
-        + [(100 + i, 101 + i) for i in range(60)],
-        "star": [(0, i) for i in range(1, 9)] + [(50, 51)],
-    }
-    for name, edges in fixtures.items():
-        e = spark.createDataFrame(edges, "src LONG, dst LONG")
-        vids = {x for p in edges for x in p} | {7777}
-        v = spark.createDataFrame([(i,) for i in vids], "id LONG")
-        plain_df, plain_rounds = connected_components_star(v, e)
-        delta_df, delta_rounds = connected_components_star(v, e, delta_frontier=True)
-        plain = {r["id"]: r["component"] for r in plain_df.collect()}
-        delta = {r["id"]: r["component"] for r in delta_df.collect()}
-        assert delta == plain, f"{name}: delta-frontier diverged"
-        assert delta_rounds == plain_rounds, f"{name}: round count diverged"
 
 
 def test_asof_join_grouped_tolerance(spark):
@@ -3222,7 +3193,10 @@ def test_round_fold_identical_to_unfolded(spark, monkeypatch):
     logical round count, whose exactness rests on the mid-plan probe
     observation. The 9-vertex graph below converges mid-fold for cc
     (odd round count) and peels to EMPTY for kcore k=3, covering the
-    AQE empty-relation fallback path for the inner observation."""
+    recount of the inner round that AQE's empty-relation propagation
+    may prune along with its observation."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
     import graph_db_spark.pregel as pregel
 
     # two components: a 6-chain (0..5, cc converges in an odd number of
@@ -3235,17 +3209,33 @@ def test_round_fold_identical_to_unfolded(spark, monkeypatch):
     w_edges = edges.withColumn("weight", (F.col("src") % 3 + 1).cast("double"))
     src = spark.createDataFrame([(0,)], "id LONG")
 
+    # count() calls made INSIDE kcore: the only one is the recount of an
+    # inner round's edges when a fold ends empty
+    recounts = []
+    count = DataFrame.count
+
+    def counting(df):
+        recounts.append(df)
+        return count(df)
+
     def run_all():
         cc = sorted(map(tuple, pregel.connected_components(verts, edges).collect()))
         sp = sorted(map(tuple, pregel.shortest_paths(w_edges, src).collect()))
         pr = sorted(map(tuple, pregel.pagerank(verts, edges, n_iters=5).collect()))
         lp = sorted(map(tuple, pregel.label_propagation(edges, n_iters=3).collect()))
         k2, r2 = pregel.kcore(edges, k=2)
+        recounts.clear()
+        monkeypatch.setattr(DataFrame, "count", counting)
         k3, r3 = pregel.kcore(edges, k=3)
-        return cc, sp, pr, lp, sorted(map(tuple, k2.collect())), r2, k3.count(), r3
+        monkeypatch.setattr(DataFrame, "count", count)
+        fallbacks = len(recounts)
+        return (cc, sp, pr, lp, sorted(map(tuple, k2.collect())), r2, k3.count(), r3), fallbacks
 
-    folded = run_all()
+    folded, folded_fallbacks = run_all()
     monkeypatch.setattr(pregel, "_ROUND_FOLD", 1)
-    unfolded = run_all()
+    unfolded, unfolded_fallbacks = run_all()
     assert folded == unfolded
-    assert folded[6] == 0  # k=3 core empty -> inner-observation fallback ran
+    assert folded[6] == 0  # k=3 core empty
+    # ...so the fold ended empty and its inner round was recounted
+    assert folded_fallbacks == 1
+    assert unfolded_fallbacks == 0  # unfolded: no inner rounds to recount

@@ -212,10 +212,14 @@ def test_concurrent_reads_overlap_write_waits(server):
                 order.append("read_start")
                 read_started.set()
                 gate.wait(5)
-                return len(tx.get_targets(tx.get_root(), "Catalogue_Artist"))
+                n = len(tx.get_targets(tx.get_root(), "Catalogue_Artist"))
+                # the read's last step, before FINISH releases the lock:
+                # after FINISH the writer may legitimately start before
+                # the client has seen the reply
+                order.append("read_end")
+                return n
 
             db.read(prog)
-            order.append("read_end")
 
     def writer():
         with _connect(server) as db:

@@ -1,4 +1,5 @@
-"""Regression tests for session.load_events.
+"""Regression tests for session.py: load_events and the capped
+initial-partition width of iterative loops.
 
 The round-3 outage: the driver fixture's parquet ``ts`` changed encoding
 from TIMESTAMP(NANOS) to TIMESTAMP(MICROS) (loads as TIMESTAMP_NTZ on
@@ -111,3 +112,74 @@ def test_load_events_nanos_keeps_submicro_precision(spark, tmp_path):
     df = load_events(spark, str(tmp_path))
     rows = sorted(df.select("event_id", "ts_ns").collect())
     assert [r["ts_ns"] for r in rows] == ns
+
+
+def test_capped_initial_partitions_restores_under_overlap(spark):
+    """Overlapping capped sections (a pregel call nested in another, or
+    concurrent loops on one session) must hold the cap while any of them
+    runs and restore the session value exactly once all have left. The
+    interleaving A enters, B enters, A leaves, B leaves is the one a
+    save/set/restore without a shared count gets wrong: B saves A's cap
+    as "the session value", A's exit uncaps B mid-loop, and B's exit
+    leaves the session capped for good."""
+    import sys
+    import threading
+
+    from graph_db_spark.session import _INITIAL_PARTITIONS_KEY as KEY
+    from graph_db_spark.session import capped_initial_partitions
+
+    saved = spark.conf.get(KEY)
+    spark.conf.set(KEY, "777")
+    try:
+        a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+        seen = {}
+
+        def a():
+            with capped_initial_partitions(spark, 3):
+                a_in.set()
+                b_in.wait(10)
+                seen["a"] = spark.conf.get(KEY)
+            a_out.set()
+
+        def b():
+            a_in.wait(10)
+            with capped_initial_partitions(spark, 3):
+                b_in.set()
+                a_out.wait(10)
+                seen["b"] = spark.conf.get(KEY)
+
+        ts = [threading.Thread(target=f) for f in (a, b)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(30)
+        assert not any(t.is_alive() for t in ts)
+        assert seen == {"a": "3", "b": "3"}
+        assert spark.conf.get(KEY) == "777"
+
+        # stress: more threads than cores, nested sections, frequent
+        # thread switches; the cap must hold throughout and be undone once
+        errors = []
+
+        def nested():
+            for _ in range(10):
+                with capped_initial_partitions(spark, 3):
+                    with capped_initial_partitions(spark):
+                        if spark.conf.get(KEY) != "3":
+                            errors.append(spark.conf.get(KEY))
+
+        switch = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            ts = [threading.Thread(target=nested) for _ in range(2 * (os.cpu_count() or 2))]
+            for t in ts:
+                t.start()
+            for t in ts:
+                t.join(120)
+        finally:
+            sys.setswitchinterval(switch)
+        assert not any(t.is_alive() for t in ts)
+        assert not errors
+        assert spark.conf.get(KEY) == "777"
+    finally:
+        spark.conf.set(KEY, saved)

@@ -2,8 +2,8 @@
 
 Usage: python tools/ab_fold.py [--sf DIR] [--reps N] query [query ...]
 
-Runs each query alternating ARM A (folded: _ROUND_FOLD=2,
-_STAR_FUSE_HALF_ROUNDS=True) and ARM B (unfolded: 1/False) inside ONE
+Runs each query alternating ARM A (folded: _ROUND_FOLD=2) and ARM B
+(unfolded: _ROUND_FOLD=1) inside ONE
 Spark session, so host contention hits both arms symmetrically — the
 only honest wall-clock comparison on this bursty sandbox. Emits one
 JSON line with per-arm reps, mins, and a wide sentinel per pair.
@@ -44,7 +44,6 @@ def main() -> None:
 
     def set_arm(folded: bool) -> None:
         pregel._ROUND_FOLD = 2 if folded else 1
-        pregel._STAR_FUSE_HALF_ROUNDS = folded
 
     # warmup: tiny-sf plan compile + target-sf table touch (bench protocol)
     for name in args.names:

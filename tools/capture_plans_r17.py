@@ -40,7 +40,6 @@ def main() -> None:
         import graph_db_spark.pregel as pregel
 
         pregel._ROUND_FOLD = 1
-        pregel._STAR_FUSE_HALF_ROUNDS = False
 
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r17"

@@ -43,7 +43,6 @@ def main() -> None:
         import graph_db_spark.pregel as pregel
 
         pregel._ROUND_FOLD = 1
-        pregel._STAR_FUSE_HALF_ROUNDS = False
 
     log_dir = tempfile.mkdtemp(prefix="gds_eventlog_")
     spark = get_spark(
