@@ -390,9 +390,7 @@ class GraphSnapshot:
         *frontier* is an int node id or a DataFrame with an ``id`` column.
         Returns a DataFrame ``id`` of distinct target ids.
         """
-        ei = self.edge_index.filter(F.col("idx_tag") == idx_tag)
-        if idx_key is not None:
-            ei = ei.filter(F.col("idx_key") == str(idx_key))
+        ei = self._index_entries(idx_tag, idx_key)
         if isinstance(frontier, int):
             # Point lookup: plain filter — Catalyst pushes tag/key/src down.
             return ei.filter(F.col("src") == frontier).select(F.col("dst").alias("id")).distinct()
@@ -402,6 +400,38 @@ class GraphSnapshot:
             .select(F.col("dst").alias("id"))
             .distinct()
         )
+
+    def walk(self, frontier, steps) -> DataFrame:
+        """A whole ``get_targets`` chain as ONE lazy plan: each hop filters
+        ``edge_index`` by tag (and key) and keeps the rows whose ``src`` is
+        the int *frontier* or a left-semi match of the previous hop's ids.
+
+        *steps* is a non-empty iterable of index tags or (idx_tag, idx_key)
+        pairs. Returns a DataFrame ``id``. Unlike ``get_targets`` no hop
+        runs ``distinct()`` (each would add a shuffle): an id reached
+        through several edges of the LAST hop appears once per such edge
+        (fan-in), so callers that need a set dedup the result. Earlier
+        hops never multiply rows — a semi join keeps each index row at
+        most once."""
+        steps = list(steps)
+        if not steps:
+            raise ValueError("walk requires at least one step")
+        out = frontier
+        for step in steps:
+            tag, key = (step, None) if isinstance(step, str) else step
+            ei = self._index_entries(tag, key)
+            if isinstance(out, int):
+                ei = ei.filter(F.col("src") == out)
+            else:
+                ei = ei.join(out.select(F.col("id").alias("src")), "src", "left_semi")
+            out = ei.select(F.col("dst").alias("id"))
+        return out
+
+    def _index_entries(self, idx_tag: str, idx_key=None) -> DataFrame:
+        ei = self.edge_index.filter(F.col("idx_tag") == idx_tag)
+        if idx_key is not None:
+            ei = ei.filter(F.col("idx_key") == str(idx_key))
+        return ei
 
     def get_sources(self, frontier) -> DataFrame:
         """Reverse traversal (traverseSources, Graph.hs:79-80,135-139): the
@@ -891,6 +921,9 @@ class WriteTx:
     def get_targets(self, frontier, idx_tag: str, idx_key=None) -> DataFrame:
         return self._view().get_targets(frontier, idx_tag, idx_key)
 
+    def walk(self, frontier, steps) -> DataFrame:
+        return self._view().walk(frontier, steps)
+
     def add_target(self, src: int, dst: int) -> None:
         """GraphDB.hs:335-336 — link src→dst; index emission at commit;
         idempotent (Graph.hs:57-61)."""
@@ -1091,8 +1124,6 @@ class GraphSession:
                 # Buffered persistence (Persistent.hs:62-69): enqueue the
                 # append on the storage's I/O worker — the commit returns
                 # without waiting on log I/O; checkpoint/load/close barrier
-                # on storage.flush(). first_seq comes from the staged list
-                # (driver-side), so the append needs no extra Spark job.
-                self.storage.persist_events_async(
-                    ev_df, first_seq=tx.events[0]["seq"]
-                )
+                # on storage.flush(). The append writes the staged list
+                # driver-side with pyarrow: no Spark job.
+                self.storage.persist_events_async(list(tx.events))

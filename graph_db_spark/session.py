@@ -87,6 +87,13 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Loops release superseded localCheckpoint generations on purpose
+    # (pregel.release); Spark warns on each that the RDD "cannot be
+    # recomputed after unpersisting". Only that logger is raised.
+    log4j = spark.sparkContext._jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.rdd.MapPartitionsRDD", log4j.Level.ERROR
+    )
     return spark
 
 

@@ -337,9 +337,10 @@ def test_remote_equivalent_to_local_session(spark, tmp_path):
 
 
 def test_get_targets_paginates_large_fanout(spark, tmp_path):
-    """A hub node's fan-out streams back in chunks (toLocalIterator +
-    NODE_LIST_CHUNK frames) — the server never materializes the whole
-    target list, and the client reassembles it in order."""
+    """A hub node's fan-out streams back in chunks (NODE_LIST_CHUNK
+    frames of chunk_size refs, cut from the one driver-side sorted
+    collect) — no wire message carries the whole target list, and the
+    client reassembles it in order."""
     session = GraphSession(GraphSnapshot.empty(spark, catalogue_schema()))
 
     # Build the hub locally in one set-oriented commit (100k remote
@@ -540,3 +541,51 @@ def test_walk_chains_server_side_single_round_trip(server):
 
         with _pytest.raises((P.CorruptRequest, RuntimeError)):
             db3.read(lambda tx: tx.walk(tx.get_root(), []))
+
+
+def _last_job_id(spark) -> int:
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None) or [-1])
+
+
+def test_walk_is_one_semi_join_plan_with_fan_in_deduped(spark, tmp_path):
+    """A k-hop WALK reply is one lazy left-semi-join chain collected once:
+    at most k Spark jobs per request on a served persistent store (no
+    per-hop distinct shuffle, no reply-side sort jobs). Fan-in — one
+    artist reached through several songs — comes back once, in
+    ascending order."""
+    from graph_db_spark.storage import EventLogStorage
+
+    def build(tx):
+        g = tx.new_node("Genre", name="fan-in", uid=1)
+        tx.add_target(tx.get_root(), g)
+        shared = tx.new_node("Artist", name="shared", uid=100)
+        for i in range(3):
+            s = tx.new_node("Song", name=f"f{i}", uid=10 + i)
+            tx.add_target(g, s)
+            tx.add_target(s, shared)
+            tx.add_target(s, tx.new_node("Artist", name=f"own{i}", uid=101 + i))
+
+    path = str(tmp_path / "store")
+    built = EventLogStorage(spark, path, catalogue_schema())
+    session = built.load(GraphSnapshot.empty)
+    session.write(build)
+    built.checkpoint(session)
+    built.close()
+    store = EventLogStorage(spark, path, catalogue_schema())
+    srv = GraphServer(
+        store.acquire_and_load(GraphSnapshot.empty),
+        model_version=MODEL_V,
+        socket_path=str(tmp_path / "walk.sock"),
+    )
+    steps = [("Catalogue_Genre_Name", "fan-in"), "Genre_Song", "Song_Artist"]
+    with srv, _connect(srv) as db:
+        names = db.read(lambda tx: [tx.get_value(r)["name"] for r in tx.walk(tx.get_root(), steps)])
+        # the reply is id-sorted; node ids follow creation order here
+        assert names == ["shared", "own0", "own1", "own2"]
+
+        before = _last_job_id(spark)  # idle session: nothing else runs
+        refs = db.read(lambda tx: tx.walk(tx.get_root(), steps))
+        jobs = _last_job_id(spark) - before
+        assert 1 <= jobs <= len(steps), jobs
+        assert len(refs) == len(set(refs)) == 4
+    store.close()

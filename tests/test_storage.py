@@ -226,6 +226,28 @@ def test_schema_stamp_mismatch(store, spark, tmp_path):
         other.load(_fresh)
 
 
+def test_load_version_refuses_other_schema(store, spark):
+    """Time travel checks the schema stamp like load(): a store reopened
+    under another GraphSchema refuses load_version."""
+    from graph_db_spark.model import EdgeKind, GraphSchema, IndexSpec, VertexKind
+    from graph_db_spark.storage import SchemaMismatchError
+
+    s = store.load(_fresh)
+    s.write(lambda tx: tx.add_target(ROOT_ID, tx.new_node("Artist", name="x", uid=1)))
+    v = store.checkpoint(s)
+    assert store.load_version(v).vertices.count() == 2
+
+    mutated = GraphSchema(
+        vertex_kinds=(VertexKind("Root"), VertexKind("Other", ("name",))),
+        edge_kinds=(EdgeKind("Root", "Other", (IndexSpec("Root_Other"),)),),
+    )
+    other = EventLogStorage(spark, store.path, mutated)
+    with pytest.raises(SchemaMismatchError):
+        other.load_version(v)
+    with pytest.raises(SchemaMismatchError):
+        other.load_version(v, replay=False)
+
+
 def test_generic_counter_store(spark, tmp_path):
     """FIXTURES.md §3 / StorageTests.hs:11-41: the toy counter state
     machine over the generic store — checkpoint-at-k + replay-suffix must
@@ -468,7 +490,7 @@ def test_async_wal_backpressure(store):
     """The async-WAL pending queue is BOUNDED (the reference's
     PersistenceBuffering, Persistent.hs:62-69): with the single I/O worker
     stalled, the commit path blocks at wal_buffer in-flight appends instead
-    of accumulating futures (each pinning an events DataFrame) without
+    of accumulating futures (each pinning an event list) without
     limit."""
     import threading
     import time
@@ -476,20 +498,20 @@ def test_async_wal_backpressure(store):
     gate = threading.Event()
     started = []
 
-    def slow_persist(events, first_seq=None):
-        started.append(first_seq)
+    def slow_persist(events):
+        started.append(events[0]["seq"])
         assert gate.wait(timeout=30), "test gate never opened"
 
     store.persist_events = slow_persist  # stall the worker behind the gate
     store.wal_buffer = 2
 
-    store.persist_events_async(None, first_seq=1)  # worker picks up, blocks
-    store.persist_events_async(None, first_seq=2)  # queued; pending now == 2
+    store.persist_events_async([{"seq": 1}])  # worker picks up, blocks
+    store.persist_events_async([{"seq": 2}])  # queued; pending now == 2
 
     blocked_done = threading.Event()
 
     def third():
-        store.persist_events_async(None, first_seq=3)
+        store.persist_events_async([{"seq": 3}])
         blocked_done.set()
 
     t = threading.Thread(target=third, daemon=True)
@@ -1043,3 +1065,71 @@ def test_stream_corrupt_epoch_meta_raises_missing_disarms(spark, tmp_path):
         available_now=True,
     )
     q2.awaitTermination(120)
+
+
+def _rows(snap):
+    return (
+        sorted(tuple(r) for r in snap.vertices.select("id", "kind", "name", "uid").collect()),
+        sorted(tuple(r) for r in snap.edges.select("src", "dst").collect()),
+        sorted(tuple(r) for r in snap.edge_index.select("src", "idx_tag", "idx_key", "dst").collect()),
+    )
+
+
+def test_wal_append_is_driver_side_and_replays(store, spark, tmp_path):
+    """A commit's WAL append launches no Spark job: the staged event list
+    is written by pyarrow as one part file plus _SUCCESS. The batches
+    replay through load() and through the streaming WAL apply
+    (stream_apply_wal_durable over store._log_dir) to the same snapshot
+    as the live session."""
+    import threading
+
+    from graph_db_spark.streaming.apply import (
+        load_published_snapshot,
+        stream_apply_wal_durable,
+    )
+
+    tracker = spark.sparkContext.statusTracker()
+    orig, jobs, gate = store.persist_events, [], threading.Semaphore(0)
+
+    def counted(events):
+        assert gate.acquire(timeout=60), "commit never released its append"
+        before = max(tracker.getJobIdsForGroup(None) or [-1])
+        orig(events)
+        jobs.append(max(tracker.getJobIdsForGroup(None) or [-1]) - before)
+
+    store.persist_events = counted
+    s = store.load(_fresh)
+
+    def commit(prog):
+        out = s.write(prog)
+        gate.release()  # the commit's own jobs are done: run its append
+        store.flush()  # and start no other job until it has finished
+        return out
+
+    def first(tx):
+        a = tx.new_node("Artist", name="Arrow One", uid=1)
+        b = tx.new_node("Artist", name="Arrow Two", uid=2)
+        tx.add_target(ROOT_ID, a)
+        tx.add_target(ROOT_ID, b)
+        return a, b
+
+    a, b = commit(first)
+    commit(lambda tx: tx.set_value(a, "Artist", name="Arrow Renamed", uid=1))
+    commit(lambda tx: tx.remove_target(ROOT_ID, b))
+    assert jobs == [0, 0, 0]
+
+    batches = store._log_batches(0)
+    assert len(batches) == 3
+    for batch in batches:
+        assert sorted(os.listdir(batch)) == ["_SUCCESS", "part-00000.parquet"]
+
+    want = _rows(s.snapshot)
+    assert _rows(EventLogStorage(spark, store.path, catalogue_schema()).load(_fresh).snapshot) == want
+
+    snaps = str(tmp_path / "snaps")
+    q = stream_apply_wal_durable(
+        spark, store._log_dir(0), snaps, catalogue_schema(), str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    assert _rows(load_published_snapshot(spark, snaps, catalogue_schema())) == want
