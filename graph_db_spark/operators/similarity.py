@@ -13,11 +13,14 @@ broadcast.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 from graph_db_spark.functions.vector import dot as _dot, hyperplane_signature, with_norm
+
+_log = logging.getLogger(__name__)
 
 __all__ = [
     "cosine_topk",
@@ -494,10 +497,12 @@ def ivfpq_residual_topk(
     variant's.
 
     *checkpoint* (default True) localCheckpoints the residual frame:
-    the PQ fits (per subspace, per Lloyd pass), both encodes, and the
-    ADC scan all read it, and uncut each re-executes the
-    coarse-assign + subtract pipeline (~10 replays; measured 48.7 → a
-    few s on the 4k fixture). The frame is corpus-sized, so this is a
+    the PQ fits, both encodes, and the ADC scan all read it, and uncut
+    each re-executes the coarse-assign + subtract pipeline (~10 replays;
+    measured 48.7 → a few s on the 4k fixture). A PQ fit whose sample is
+    small (≤ 512 rows) reads it once and runs its Lloyd passes on the
+    driver; a larger sample reads it once per pass (``kmeans_fit``).
+    The frame is corpus-sized, so this is a
     fixture/medium-scale cut — at billion-vector scale the production
     flow PERSISTS the residual codes as a write-time index (the
     ``signature_store_write`` pattern) instead of checkpointing raw
@@ -986,7 +991,7 @@ def _np_l2_argmin_assign(
 
 def _np_l2_argmin_local(pool: list, cents: dict, L: int) -> list:
     """Driver-side twin of ``_np_l2_argmin_assign``'s kernel for a
-    driver-held row pool (the pyramid's upper fits): same numpy
+    driver-held row pool (a carried codebook or a small fit sample): same numpy
     arithmetic — sequential per-dim accumulation (the JVM fold order),
     NaN→inf before the first-minimum argmin — same pre-filter (length-L,
     no null elements), zero Spark jobs. Returns [(cell, vec), ...]."""
@@ -1130,17 +1135,36 @@ def _kmeans_fit_driver(
     zip_with/aggregate fold for distances, the (d, cell) lexicographic
     struct-min for assignment, per-(cell, dim) DECIMAL(28,12) sums divided
     by the per-dim member count and rounded in Spark (never in Python).
-    Only the EXECUTION changes: the k-row codebook is collected to the
-    driver between Lloyd passes (the O(k) centroid-fetch pattern the repo
-    already uses) and re-embedded as literal arrays, so each pass is ONE
-    map-only scan of the fit sample feeding one map-side-combinable
-    aggregation (a k x dim fixed-width shuffle) — instead of a crossJoin
-    materializing n x k vector-carrying struct rows through a hash
-    aggregate plus a posexplode double-shuffle, per pass, inside one deep
-    plan (measured round 16: the k=125 fit at sf0.1 was 15.4 s of
-    dedup_semantic_tree's 17.5; this path executes the identical values
-    in well under a second). Python never computes on the values: it only
-    ferries exact doubles between jobs.
+    Only the EXECUTION changes, by one of two routes. For integral ids
+    both start with one id-ordered collect of at most 513 sample rows — a
+    single job whatever the partitioning.
+
+    - **pool** — the fit sample is small (at most 512 rows, rows x dim
+      within KMEANS_INLINE_MAX, no null id) or is a codebook this module
+      built (its rows ride the DataFrame). The fetch above holds it (zero
+      jobs for a carried codebook), and every Lloyd pass runs on the
+      driver: ``_np_l2_argmin_local`` assigns, and
+      ``_decimal_means_local`` reproduces the DECIMAL means exactly. A
+      fit then costs that one job whatever n_iters is (measured: the
+      three ~50-row fits of ann_ivfpq_residual_topk went 6.5 s → 0.4 s).
+      A pass whose members hold a non-finite value keeps the Spark
+      aggregation (the NaN→NULL decimal contract).
+    - **arrow** — a larger sample: the init rows come from the same fetch
+      (so it is the route's only job outside its passes; it ships up to
+      513 x dim doubles to the driver). The k-row codebook is
+      collected to the driver between Lloyd passes and embedded in a
+      map-only Arrow/numpy assignment (``_np_l2_argmin_assign``), so
+      each pass is ONE scan of the fit sample feeding one
+      map-side-combinable aggregation (a k x dim fixed-width shuffle) —
+      instead of the lazy plan's crossJoin materializing n x k
+      vector-carrying struct rows through a hash aggregate plus a
+      posexplode double-shuffle, per pass (measured
+      round 16: the k=125 fit at sf0.1 was 15.4 s of
+      dedup_semantic_tree's 17.5; this route runs it in well under a
+      second).
+
+    Both routes give the lazy plan's values bit for bit (pinned in the
+    tests). The chosen route is logged at DEBUG.
 
     Returns None when the codebook cannot be inlined (k > 512 or
     k x dim > KMEANS_INLINE_MAX) — the caller falls back to the broadcast
@@ -1155,6 +1179,7 @@ def _kmeans_fit_driver(
         local_rows = None  # null ids: keep the JVM framing's null semantics
     pool = None
     fit = None
+    head = None
     if local_rows is not None:
         # Input is a codebook this module built (the pyramid's upper
         # levels): its rows ride the DataFrame object, so the sample
@@ -1183,12 +1208,37 @@ def _kmeans_fit_driver(
             if sampled
             else v
         )
+        if isinstance(v.schema["id"].dataType, (T.ShortType, T.IntegerType, T.LongType)):
+            # ONE id-ordered bounded collect (a TakeOrderedAndProject: one
+            # job whatever the partitioning) both picks the route and
+            # serves as the init fetch. A small sample becomes the pool:
+            # every Lloyd pass then runs driver-side (below), so the fit's
+            # job count does not grow with n_iters. A larger one keeps the
+            # Arrow passes and takes its init rows from this fetch, so
+            # that route needs no init collect of its own. The ceilings
+            # that bound the inline codebook bound the pool.
+            head = [
+                (r["id"], r["v"])
+                for r in fit.select("id", "v")
+                .orderBy("id")
+                .limit(_KMEANS_INLINE_MAX_K + 1)
+                .collect()
+            ]
+            width = max((len(vec) for _i, vec in head if vec is not None), default=0)
+            if (
+                len(head) <= _KMEANS_INLINE_MAX_K
+                and len(head) * width <= KMEANS_INLINE_MAX
+                and all(i is not None for i, _ in head)
+            ):
+                pool, fit = head, None
     if sampled:
         # k smallest sampled ids (same TakeOrderedAndProject the lazy
         # path plans), renumbered to cells 0..k-1 — rank-by-id, exactly
         # the triangular-join renumbering's count(pid < id)
         if pool is not None:
             init_rows = sorted(pool, key=lambda r: r[0])[:k]
+        elif head is not None:
+            init_rows = head[:k]  # k <= 512 < len(head) or the whole sample
         else:
             init_rows = [
                 (r["id"], r["v"])
@@ -1207,6 +1257,13 @@ def _kmeans_fit_driver(
     else:
         if pool is not None:
             init_rows = [(i, vec) for i, vec in pool if i < k]
+        elif head is not None and (
+            len(head) <= _KMEANS_INLINE_MAX_K
+            or (head[-1][0] is not None and head[-1][0] >= k)
+        ):
+            # the fetch holds the whole sample, or its last (largest) id
+            # is >= k, so every row with id < k sorts inside it
+            init_rows = [(i, vec) for i, vec in head if i is not None and i < k]
         else:
             init_rows = [
                 (r["id"], r["v"])
@@ -1250,6 +1307,13 @@ def _kmeans_fit_driver(
     sel = ["cell"] + [
         f"round(cast(s{d} as double) / n, {round_digits}) as val{d}" for d in range(L)
     ]
+    _log.debug(
+        "kmeans_fit route=%s k=%d n_iters=%d pool_rows=%s",
+        "pool" if pool is not None else "arrow",
+        k,
+        n_iters,
+        len(pool) if pool is not None else None,
+    )
     # Lloyd passes: tiny k x dim shuffles — run under the capped AQE
     # initial width like the lazy path (round 14)
     from graph_db_spark.session import capped_initial_partitions
@@ -1257,12 +1321,12 @@ def _kmeans_fit_driver(
     with capped_initial_partitions(spark):
         for _ in range(n_iters):
             if pool is not None:
-                # Fully driver-side pass over the ≤512-row pool (round
-                # 16): numpy argmin assignment + decimal-exact means
-                # twin — ZERO Spark jobs (the per-pass parquet-write +
-                # groupBy-collect round-trip cost ~0.5 s of pure job
-                # latency per pass; measured 2.25 s of the tree entry's
-                # upper fits). Falls back to the Spark aggregation for
+                # Fully driver-side pass over the ≤512-row pool (a carried
+                # codebook or a small fetched sample): numpy argmin
+                # assignment + decimal-exact means twin — ZERO Spark jobs
+                # (a per-pass Spark round-trip costs ~0.5 s of pure job
+                # latency; measured 2.25 s of the tree entry's upper fits
+                # in round 16). Falls back to the Spark aggregation for
                 # non-finite members (the NaN→NULL decimal contract).
                 assigned_rows = _np_l2_argmin_local(pool, cents, L)
                 means = _decimal_means_local(assigned_rows, L, round_digits)
@@ -1289,8 +1353,9 @@ def _kmeans_fit_driver(
                     return None
             rows = assigned.groupBy("cell").agg(*aggs).selectExpr(*sel).collect()
             for r in rows:
-                # NaN members make a dim's sum NULL (cast NaN→decimal is
-                # NULL) — the lazy path emits the same NULL mean
+                # a NaN element casts to a NULL decimal, which sum() skips
+                # while count(1) still counts its member — the lazy path
+                # computes the same value
                 cents[r["cell"]] = [r[f"val{d}"] for d in range(L)]
     schema = T.StructType(
         [
@@ -1364,17 +1429,20 @@ def kmeans_fit(
     different (both valid) codebooks; consumers' oracles must replicate
     the same rule.
 
-    Scale shape per iteration: centroids broadcast into the assignment
-    (one sample scan, no shuffle), then ONE shuffle of fixed-width
-    (cell, dim, x) triples for the map-side-combinable mean agg. Empty
-    cells keep their previous centroid (standard Lloyd's fallback).
+    Scale shape per iteration (lazy plan): centroids broadcast into the
+    assignment (one sample scan, no shuffle), then ONE shuffle of
+    fixed-width (cell, dim, x) triples for the map-side-combinable mean
+    agg. Empty cells keep their previous centroid (standard Lloyd's
+    fallback).
 
-    *checkpoint* (default True) localCheckpoints the trained codebook so
-    consumers don't re-run the Lloyd passes. Caveats: the fit then
-    EXECUTES at plan-construction time, and localCheckpoint blocks are
-    lost on executor failure (unlike reliable checkpoints) — pass
-    checkpoint=False when merely composing plans or on preemptible
-    executors."""
+    *checkpoint* (default True) EXECUTES the fit now and returns the
+    trained codebook as a materialized k-row frame, so consumers don't
+    re-run the Lloyd passes (``_kmeans_fit_driver``: a fit sample of at
+    most 512 rows is fetched once and iterated on the driver — one job
+    per fit; a larger one runs one map-only assignment scan plus one
+    k x dim aggregation per pass). Codebooks too large to inline keep
+    the lazy plan, localCheckpointed; those blocks are lost on executor
+    failure. Pass checkpoint=False when merely composing plans."""
     v = df.select(
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
@@ -1402,6 +1470,7 @@ def kmeans_fit(
         )
         if fast is not None:
             return fast
+    _log.debug("kmeans_fit route=lazy k=%d n_iters=%d", k, n_iters)
     if sample_mod is not None:
         fit = v.filter(kmeans_sample_pred(F.col("id"), sample_mod)) if sample_mod > 1 else v
         # k smallest sampled ids, renumbered to cells 0..k-1.

@@ -318,21 +318,36 @@ def dedup_survivors_minhash(spark, sf_dir):
     """Dedup resolution: cluster the MinHash near-dup pairs with
     connected components (pregel), keep min doc id per cluster as the
     canonical survivor — the step that turns pairwise similarity into an
-    actionable keep/drop list. Composes two engine operators end-to-end."""
+    actionable keep/drop list. Composes two engine operators end-to-end.
+
+    The pair set feeds both the CC vertices and its edges, so it is
+    checkpointed once: uncut, the shingle → signature → band-join →
+    verify pipeline ran twice (once for the initial labels, once for the
+    edge cache). CC returns a checkpoint, so the pairs are released as
+    soon as it does."""
     from graph_db_spark.operators.dedup import minhash_near_dup_pairs
-    from graph_db_spark.pregel import connected_components
+    from graph_db_spark.pregel import connected_components, release
 
     d = _t(spark, sf_dir, "documents")
-    pairs = minhash_near_dup_pairs(
-        d, "doc_id", "text", threshold=0.5,
-        corpus_rows=_parquet_rows(sf_dir, "documents"),
-    ).select("a", "b")
+    pairs = (
+        minhash_near_dup_pairs(
+            d, "doc_id", "text", threshold=0.5,
+            corpus_rows=_parquet_rows(sf_dir, "documents"),
+        )
+        .select("a", "b")
+        .localCheckpoint(eager=True)
+    )
     nodes = (
         pairs.select(F.col("a").alias("id"))
         .unionByName(pairs.select(F.col("b").alias("id")))
         .distinct()
     )
-    comp = connected_components(nodes, pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")))
+    try:
+        comp = connected_components(
+            nodes, pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        )
+    finally:
+        release(pairs)
     return comp.select(F.col("id").alias("doc_id"), F.col("component").alias("survivor"))
 
 def _simhash_banded_oracle(n_bits: int, bands: int, max_hamming: int) -> str:

@@ -931,7 +931,13 @@ class EventLogStorage:
         batches — the reference's deserializeLatestCheckpoint scans
         newest-to-oldest and takes the first readable version
         (Storage.hs:121-131, StorageTests.hs:55-60
-        ``test_loadsPastTenAttempts``).
+        ``test_loadsPastTenAttempts``). Only a missing or partial publish
+        (``FileNotFoundError``, or a ``ValueError`` from a torn
+        ``meta.json``) counts as unreadable, and each such fallback logs a
+        WARNING; any other error reading a version propagates. So a fully
+        published version whose table file is corrupt aborts recovery:
+        Spark's read error does not tell bad bytes from a transient I/O
+        fault, and rewinding to an older version on either would hide it.
 
         ``empty_factory(spark, schema) -> GraphSnapshot`` seeds the v0 state
         when no checkpoint exists (the reference's ``initGraph``,
@@ -948,8 +954,18 @@ class EventLogStorage:
                 break
             except SchemaMismatchError:
                 raise  # wrong model is a caller error, not a corrupt file
-            except Exception:
-                continue  # unreadable/partial — fall back to the next older
+            except (FileNotFoundError, ValueError) as exc:
+                # A missing or partial publish (no meta.json or _SUCCESS
+                # marker, or a torn meta.json) falls back to the next older
+                # version. Any other error (permissions, EIO) says nothing
+                # about the version's contents and may be transient, so it
+                # propagates and a retry can still read the newest version.
+                logging.getLogger(__name__).warning(
+                    "load: checkpoint %s at %s is unreadable (%s: %s); "
+                    "falling back to an older version",
+                    version, self.path, type(exc).__name__, exc,
+                )
+                continue
         if snap is None and all_versions:
             # Checkpoints were written but none (live or archived) is
             # readable. Seeding empty_factory here would silently rebuild

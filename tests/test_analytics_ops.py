@@ -2403,6 +2403,102 @@ def test_kmeans_fit_duplicate_ids_raise(spark):
     assert kmeans_fit(deduped, k=6, n_iters=1, sample_mod=1).count() == 6
 
 
+def test_kmeans_fit_pool_route_equals_lazy_plan(spark, tmp_path, caplog):
+    """A small fit sample is fetched with one bounded collect and every
+    Lloyd pass runs on the driver (the pool route). Sampled and unsampled
+    pool fits equal the lazy plan bit for bit and cost exactly one Spark
+    job whatever n_iters is, over a one-file or a 4-partition source. A
+    NaN member keeps the Spark aggregation for its means and still equals
+    the lazy plan. A 600-row sample takes the Arrow route, equals the
+    lazy plan too, and runs one job besides its passes: the fetch also
+    supplies that route's init rows."""
+    import logging
+    import math
+
+    from graph_db_spark.operators.similarity import kmeans_fit, kmeans_sample_pred
+
+    sc = spark.sparkContext
+
+    def count_jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def codebook(frame):
+        # NaN != NaN: compare a NaN-normalized copy
+        return {
+            r.vec_id: [x if x is None or not math.isnan(x) else "nan" for x in r.embedding]
+            for r in frame.collect()
+        }
+
+    def frame(n, nan_at=None):
+        rows = [
+            (i, [float("nan") if (i, j) == nan_at else ((i * 7 + j * 13) % 11) / 3.0 - 1.7 + i * 1e-7
+                 for j in range(8)])
+            for i in range(n)
+        ]
+        path = str(tmp_path / f"km{n}_{nan_at[0] if nan_at else 'none'}")
+        spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<DOUBLE>").coalesce(1).write.parquet(path)
+        return spark.read.parquet(path)
+
+    small = frame(200)
+    modes = [{}, {"sample_mod": 4}]
+    driver = {}
+    with caplog.at_level(logging.DEBUG, logger="graph_db_spark.operators.similarity"):
+        for i, kw in enumerate(modes):
+            for n_iters in (1, 3):
+                out, jobs = count_jobs(
+                    f"km-pool-{i}-{n_iters}",
+                    lambda: kmeans_fit(small, k=6, n_iters=n_iters, **kw),
+                )
+                assert jobs == 1, (kw, n_iters, jobs)
+                driver[i, n_iters] = codebook(out)
+    routes = [r.getMessage() for r in caplog.records if "route=" in r.getMessage()]
+    assert len(routes) == 4 and all("route=pool" in m for m in routes), routes
+    for i, kw in enumerate(modes):
+        for n_iters in (1, 3):
+            lazy = kmeans_fit(small, k=6, n_iters=n_iters, checkpoint=False, **kw)
+            assert driver[i, n_iters] == codebook(lazy), (kw, n_iters)
+
+    spread = small.repartition(4).localCheckpoint()
+    spread_jobs = [
+        count_jobs(f"km-spread-{n_iters}", lambda: kmeans_fit(spread, k=6, n_iters=n_iters))[1]
+        for n_iters in (1, 3)
+    ]
+    assert spread_jobs == [1, 1], spread_jobs
+
+    # a NaN member (a sampled, non-init row, so both modes see it): the
+    # driver means twin declines and Spark aggregates that pass
+    member = small.filter(kmeans_sample_pred(F.col("vec_id"), 4)).agg(F.max("vec_id")).first()[0]
+    nan = frame(200, nan_at=(member, 2))
+    for i, kw in enumerate(modes):
+        out, jobs = count_jobs(
+            f"km-nan-{i}", lambda: kmeans_fit(nan, k=6, n_iters=2, **kw)
+        )
+        assert jobs > 1  # the fallback aggregation ran
+        assert codebook(out) == codebook(
+            kmeans_fit(nan, k=6, n_iters=2, checkpoint=False, **kw)
+        )
+
+    big = frame(600)
+    caplog.clear()
+    with caplog.at_level(logging.DEBUG, logger="graph_db_spark.operators.similarity"):
+        arrow = {
+            n_iters: count_jobs(
+                f"km-arrow-{n_iters}", lambda: kmeans_fit(big, k=6, n_iters=n_iters)
+            )
+            for n_iters in (1, 2)
+        }
+    assert any("route=arrow" in r.getMessage() for r in caplog.records)
+    # jobs = fixed + n_iters * per_pass, and the fixed part is the fetch
+    per_pass = arrow[2][1] - arrow[1][1]
+    assert per_pass >= 1 and arrow[1][1] - per_pass == 1, arrow
+    assert codebook(arrow[2][0]) == codebook(kmeans_fit(big, k=6, n_iters=2, checkpoint=False))
+
+
 def test_semantic_pyramid_ks():
     """Auto-k is CONSTANT cell size (k ∝ n) and the pyramid shrinks by
     the branch factor per level until one broadcast probe suffices."""

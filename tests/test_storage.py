@@ -150,34 +150,111 @@ def test_restart_equivalence_random_updates(store, spark):
     ).as_tuple()
 
 
-def test_load_skips_unreadable_checkpoint(store, spark):
-    """Storage.hs:121-131 / StorageTests.hs:55-60 test_loadsPastTenAttempts:
-    load() scans newest-to-oldest and takes the first *readable* checkpoint,
-    replaying every later generation's WAL suffix on top."""
-    import shutil
-
+def _two_checkpoints_and_a_suffix(store):
+    """v1 and v2 both live (v1 restored from the archive), plus one WAL
+    write after v2. Returns the stats the store must recover to."""
     s = store.load(_fresh)
     s.write(lambda tx: tx.add_target(ROOT_ID, tx.new_node("Artist", name="a", uid=1)))
-    store.checkpoint(s)  # v1 (good)
+    store.checkpoint(s)  # v1
     s.write(lambda tx: tx.add_target(ROOT_ID, tx.new_node("Artist", name="b", uid=2)))
-    store.checkpoint(s)  # v2 — will be corrupted
+    store.checkpoint(s)  # v2
     s.write(lambda tx: tx.add_target(ROOT_ID, tx.new_node("Artist", name="c", uid=3)))
     store.flush()
-    want = s.read(lambda g: g.get_stats()).as_tuple()
-
-    # v1 moved to archive by v2's publish; restore it so there is an older
-    # live version to fall back to, then corrupt v2's commit marker.
     shutil.move(
         os.path.join(store.path, "archive", "checkpoint-1"),
         os.path.join(store.path, "checkpoints", "1"),
     )
-    os.remove(os.path.join(store.path, "checkpoints", "2", "meta.json"))
+    return s.read(lambda g: g.get_stats()).as_tuple()
 
-    s2 = store.load(_fresh)
-    assert s2.read(lambda g: g.get_stats()).as_tuple() == want
-    # allocator state recovered from v1's meta + replayed suffix
-    d = s2.write(lambda tx: tx.new_node("Artist", name="d", uid=4))
-    assert d > 0
+
+def test_load_skips_unreadable_checkpoint(spark, tmp_path, caplog):
+    """Storage.hs:121-131 / StorageTests.hs:55-60 test_loadsPastTenAttempts:
+    load() scans newest-to-oldest and takes the first *readable* checkpoint,
+    replaying every later generation's WAL suffix on top. Each fallback
+    logs a WARNING naming the skipped version and the reason. Two partial
+    publishes of v2 are injected, each in its own store: meta.json removed
+    (FileNotFoundError) and meta.json truncated (JSONDecodeError, a
+    ValueError)."""
+    import logging
+
+    def remove(meta):
+        os.remove(meta)
+
+    def truncate(meta):
+        with open(meta) as f:
+            text = f.read()
+        with open(meta, "w") as f:
+            f.write(text[: len(text) // 2])
+
+    for fault, reason in ((remove, "FileNotFoundError"), (truncate, "JSONDecodeError")):
+        store = EventLogStorage(spark, str(tmp_path / fault.__name__), catalogue_schema())
+        want = _two_checkpoints_and_a_suffix(store)
+        fault(os.path.join(store.path, "checkpoints", "2", "meta.json"))
+
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger="graph_db_spark.storage"):
+            s2 = store.load(_fresh)
+        assert s2.read(lambda g: g.get_stats()).as_tuple() == want, reason
+        fallbacks = [
+            r.getMessage() for r in caplog.records if "falling back" in r.getMessage()
+        ]
+        assert len(fallbacks) == 1, (reason, fallbacks)
+        assert "checkpoint 2 " in fallbacks[0] and reason in fallbacks[0]
+        # allocator state recovered from v1's meta + replayed suffix
+        d = s2.write(lambda tx: tx.new_node("Artist", name="d", uid=4))
+        assert d > 0
+
+
+def test_load_raises_on_corrupt_table_file(store, spark, caplog, monkeypatch):
+    """A fully published checkpoint (meta.json and every _SUCCESS marker
+    present) whose table file is corrupt is not a partial publish: Spark's
+    read error propagates from the newest version instead of recovery
+    moving on to the older one, and no fallback is logged."""
+    import logging
+
+    _two_checkpoints_and_a_suffix(store)
+    real = EventLogStorage._read_ckpt
+    tried = []
+
+    def traced(self, version):
+        tried.append(version)
+        return real(self, version)
+
+    monkeypatch.setattr(EventLogStorage, "_read_ckpt", traced)
+    vertices = os.path.join(store.path, "checkpoints", "2", "vertices")
+    parts = [f for f in os.listdir(vertices) if f.endswith(".parquet")]
+    assert parts
+    for f in parts:
+        with open(os.path.join(vertices, f), "wb") as out:
+            out.write(b"not a parquet file" * 64)
+
+    with caplog.at_level(logging.WARNING, logger="graph_db_spark.storage"):
+        with pytest.raises(Exception):
+            store.load(_fresh)
+    assert tried == [2]
+    assert not [r for r in caplog.records if "falling back" in r.getMessage()]
+
+
+def test_load_raises_on_io_error_instead_of_falling_back(store, spark, monkeypatch):
+    """An I/O error reading the newest checkpoint may be transient: load()
+    raises it rather than recovering from an older version."""
+    import errno
+
+    _two_checkpoints_and_a_suffix(store)
+    real = EventLogStorage._read_ckpt
+    tried = []
+
+    def flaky(self, version):
+        tried.append(version)
+        if version == 2:
+            raise OSError(errno.EIO, "Input/output error")
+        return real(self, version)
+
+    monkeypatch.setattr(EventLogStorage, "_read_ckpt", flaky)
+    with pytest.raises(OSError) as info:
+        store.load(_fresh)
+    assert info.value.errno == errno.EIO
+    assert tried == [2]
 
 
 def test_crash_between_commits(store, spark, tmp_path):
