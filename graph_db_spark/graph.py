@@ -462,7 +462,6 @@ class GraphSnapshot:
         self,
         root_id: int = ROOT_ID,
         max_iters: int = 1000,
-        broadcast_frontier: bool = True,
     ) -> DataFrame:
         """BFS from root via iterative frontier joins — the Pregel-style
         re-expression of the reference's queue+visited-set walk
@@ -470,7 +469,7 @@ class GraphSnapshot:
         truncated per level with localCheckpoint (``pregel._bfs``)."""
         edges = self.edges.select("src", "dst").persist()
         try:
-            return self._reachable_on(edges, root_id, max_iters, broadcast_frontier)
+            return self._reachable_on(edges, root_id, max_iters)
         finally:
             edges.unpersist()
 
@@ -486,13 +485,12 @@ class GraphSnapshot:
         edges: DataFrame,
         root_id: int,
         max_iters: int,
-        broadcast_frontier: bool,
     ) -> DataFrame:
         """BFS over a caller-persisted narrow (src, dst) frame → the
         checkpointed reachable id set. ``pregel._bfs`` runs the level
         loop; this method only supplies the level expansion.
 
-        With ``broadcast_frontier`` (default) the frontier and visited
+        The frontier and visited
         frames — bounded by the reachable-node count — are broadcast, so
         each level is ONE shuffle (the distinct over newly-found dsts):
         the cached edge list is scanned in place (BroadcastHashJoin inner
@@ -503,8 +501,6 @@ class GraphSnapshot:
         visited set passes BFS_BROADCAST_MAX_IDS it degrades to
         shuffle joins + AQE mid-traversal, so a 100M-node reachable set
         completes instead of failing on the broadcast limit.
-        ``broadcast_frontier=False`` disables the broadcast path from the
-        first level.
 
         Degraded-mode shuffle is LEVEL-SIZED, not edge-table-sized
         (round-11 verdict item 4: 60 MB at 10× → 2,256 MB at 30× for 3×
@@ -542,7 +538,7 @@ class GraphSnapshot:
 
         def expand(frontier, visited, _level, n_visited):
             src = frontier.withColumnRenamed("id", "src")
-            if broadcast_frontier and n_visited <= self.BFS_BROADCAST_MAX_IDS:
+            if n_visited <= self.BFS_BROADCAST_MAX_IDS:
                 return (
                     edges.join(F.broadcast(src), "src")
                     .select(F.col("dst").alias("id"))
@@ -572,7 +568,7 @@ class GraphSnapshot:
             if twin:
                 twin[0].unpersist()
 
-    def get_stats(self, broadcast_frontier: bool = True) -> GraphStats:
+    def get_stats(self) -> GraphStats:
         """GraphDB.hs:355-356 / Graph.hs:82-118: (reachable nodes, distinct
         edges from reachable nodes, index entries from reachable nodes).
 
@@ -591,10 +587,10 @@ class GraphSnapshot:
             # paying its per-exchange constant per BFS level measured
             # get_stats 4.0 -> 5.4 s at sf0.1, round 14)
             with capped_initial_partitions(edges.sparkSession):
-                reach = self._reachable_on(edges, ROOT_ID, 1000, broadcast_frontier)
+                reach = self._reachable_on(edges, ROOT_ID, 1000)
                 n_nodes = reach.count()
                 # same size guard as the BFS loop: the known count decides
-                use_bcast = broadcast_frontier and n_nodes <= self.BFS_BROADCAST_MAX_IDS
+                use_bcast = n_nodes <= self.BFS_BROADCAST_MAX_IDS
                 hint = F.broadcast if use_bcast else (lambda df: df)
                 reach_src = hint(reach.withColumnRenamed("id", "src"))
                 # the two counts are independent jobs over already-pinned

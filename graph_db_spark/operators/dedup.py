@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, Window, functions as F
 
 from graph_db_spark.functions.text import WHITESPACE, shingle_array, ws_tokens
+from graph_db_spark.operators.similarity import _cos_min, _cos_nearest, _cos_scored
 
 
 def tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -699,7 +700,7 @@ def semantic_store_write(
     c.write.mode("errorifexists").parquet(os.path.join(path, "centroids"))
     v = _norm_frame(embeddings, id_col, vec_col, "id", "vec")
     (
-        _assign_nearest(v, c)
+        _cos_nearest(v, c)
         .join(v, "id")
         .select("cell", "id", "vec", F.col("__norm").alias("nrm"))
         .write.mode("errorifexists")
@@ -736,7 +737,7 @@ def incremental_semantic_vs_store(
     re-fits and re-publishes (same as any IVF index)."""
     cent = spark.read.parquet(os.path.join(store_path, "centroids"))
     a = _norm_frame(arrivals, id_col, vec_col, "id", "vec")
-    asg = _assign_nearest(a, cent)
+    asg = _cos_nearest(a, cent)
     batch = asg.join(a, "id").select(
         "cell", "id", "vec", F.col("__norm").alias("nrm")
     ).localCheckpoint()
@@ -1088,42 +1089,6 @@ def _norm_frame(df: DataFrame, id_col: str, vec_col: str, id_as: str, vec_as: st
     )
 
 
-def _assign_nearest(
-    v: DataFrame,
-    c: DataFrame,
-    cell_col: str = "cell",
-    cvec_col: str = "cvec",
-    cnorm_col: str = "cnorm",
-) -> DataFrame:
-    """Nearest-centroid pick by cosine via min-struct (map-side
-    combinable, no window): (-ccos, cell) lexicographic min ==
-    orderBy(ccos desc, cell asc) — the ivf_assign contract, rounded to
-    6dp for cross-engine stability. *v* = (id, vec, __norm); *c* =
-    (cell_col, cvec_col, cnorm_col), broadcast. Zero-norm denominators
-    go through a when-guard to NULL (ANSI mode raises DIVIDE_BY_ZERO on
-    a bare division) and are filtered — degenerate vectors get NO row."""
-    from graph_db_spark.functions.vector import dot
-
-    denom = F.col("__norm") * F.col(cnorm_col)
-    return (
-        v.crossJoin(F.broadcast(c))
-        .withColumn(
-            "ccos",
-            F.round(F.when(denom != 0, dot(F.col("vec"), F.col(cvec_col)) / denom), 6),
-        )
-        .filter(F.col("ccos").isNotNull())
-        .groupBy("id")
-        .agg(
-            F.min(F.struct((-F.col("ccos")).alias("negcos"), F.col(cell_col))).alias("m")
-        )
-        .select(
-            "id",
-            F.col(f"m.{cell_col}").alias(cell_col),
-            (-F.col("m.negcos")).alias("cent_cos"),
-        )
-    )
-
-
 def _semdedup_from_assign(
     v: DataFrame, assign: DataFrame, tau: float, checkpoint: bool = True
 ) -> DataFrame:
@@ -1144,7 +1109,7 @@ def _semdedup_from_assign(
     # session; pregel.release() exists only where loops need the release
     # to be DETERMINISTIC mid-iteration rather than GC-driven.
     # checkpoint=False skips the cut for callers that only COMPOSE the
-    # plan (see semantic_dedup_verdicts docstring).
+    # plan (see semantic_dedup_tree_verdicts docstring).
     mem = v.join(assign, "id").select("id", "vec", "__norm", "cell", "cent_cos")
     if checkpoint:
         mem = mem.localCheckpoint(eager=True)
@@ -1213,187 +1178,6 @@ def _semdedup_from_assign(
     )
 
 
-def semantic_dedup_verdicts(
-    df: DataFrame,
-    centroids: DataFrame,
-    tau: float = 0.99,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    checkpoint: bool = True,
-) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) with EXACT
-    nearest-centroid assignment — the bounded recall BASELINE. For a
-    production corpus use ``semantic_dedup`` (below), which composes the
-    sampled codebook fit with the hierarchical assignment route: this
-    exact variant's n·k assignment term is a measured n^1.5 scale floor
-    when k ∝ sqrt(n) (SCALE_STRESS_r08/r10). Returns one verdict row per
-    vector: (id, cell, cent_cos, pruned).
-
-    Each vector is assigned to its nearest trained centroid by cosine
-    (rounded to 6dp, ties on cell id — the ivf_assign contract). Within
-    a cell, members are ordered by (cent_cos ASC, id ASC) and a vector
-    is PRUNED when some earlier member of its cell has cosine >= tau to
-    it — i.e. the kept representative of each near-dup group is the one
-    LEAST similar to the centroid (the paper's default keep-rule:
-    keeping cluster outliers preserves diversity; Table 1 shows the
-    keep-low/keep-high/random choice barely matters).
-
-    Scale shape: the centroid table broadcasts into assignment (one
-    corpus scan, no shuffle); the member frame shuffles ONCE on cell id
-    for the within-cell pair join (equi-join — never a cross product;
-    AQE skew-split applies if a cell runs hot). Pairwise work is
-    sum(|cell|^2): k is chosen so |cell| ~ n/k stays bounded (the paper
-    runs 50k clusters for 440M embeddings), making total work O(n * n/k)
-    — linear when k scales with the corpus. The flat n*k assignment
-    matmul then dominates (the term the paper offloads to GPU faiss);
-    ``semantic_dedup_hier_verdicts`` below cuts it to ~n*3*sqrt(k) with
-    a coarse quantizer (n_probe=2). Degenerate vectors (zero-norm -> NULL cosine) get
-    no assignment and are emitted with NULL cell, cent_cos, and
-    pruned=false, mirroring ivf_assign's degenerate-input contract.
-
-    *checkpoint* (default True) localCheckpoints the shared member frame
-    — without the cut every consumer re-runs the scan+assignment
-    subtree. Caveats: the cut EXECUTES Spark jobs at plan-construction
-    time (composing the operator is no longer lazy), and localCheckpoint
-    blocks, unlike reliable checkpoints, are lost on executor failure.
-    Pass checkpoint=False when merely composing plans or running on
-    preemptible executors where recompute-on-loss must stay possible
-    (kmeans_fit exposes the same escape hatch)."""
-    v = _norm_frame(df, id_col, vec_col, "id", "vec")
-    c = _norm_frame(centroids, id_col, vec_col, "cell", "cvec").withColumnRenamed(
-        "__norm", "cnorm"
-    )
-    return _semdedup_from_assign(v, _assign_nearest(v, c), tau, checkpoint=checkpoint)
-
-
-def semantic_dedup_hier_verdicts(
-    df: DataFrame,
-    centroids: DataFrame,
-    coarse: DataFrame,
-    tau: float = 0.99,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probe: int = 2,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """SemDeDup with HIERARCHICAL (coarse-quantized) assignment — the
-    scale path for the n*k assignment term.
-
-    Exact nearest-centroid assignment costs n*k cosine evaluations; with
-    the paper's k ∝ n cluster scaling that term is the super-linear
-    floor of the exact method (measured: SCALE_STRESS_r08 semdedup,
-    n^1.5 slope at k=sqrt(n)). Standard fix — the same two-level idea as
-    IVF coarse quantization / hierarchical k-means: fit a *coarse*
-    codebook over the fine *centroids* (k' ~ sqrt(k) cells), route each
-    vector to its *n_probe* nearest coarse cells (n*k' evals), then pick
-    the nearest FINE centroid among those cells' members (~n_probe*k/k'
-    evals) — n*(k' + n_probe*k/k') ~ n*(1+n_probe)*sqrt(k) total, with
-    everything broadcast and zero extra shuffle. Approximation: a vector
-    whose true nearest fine centroid lives outside its n_probe best
-    coarse cells is routed to a second-best neighborhood (the IVF
-    n_probe trade); the pairwise prune then runs unchanged within the
-    routed cells, so verdicts can differ from the exact variant only for
-    those boundary vectors (n_probe=2 agrees on 94.6% of verdicts even
-    on the worst-case tiny fixture, k=8/k'=3, vs 87.7% at n_probe=1 —
-    test test_semantic_dedup_hier_matches_exact_mostly). All picks are
-    6dp-rounded cosines with id tie-breaks — deterministic, and the
-    DuckDB oracle replicates the full two-level route bit-for-bit.
-
-    *coarse* is the coarse codebook (same (id, vec) schema) — typically
-    ``kmeans_fit(centroids, k=ceil(sqrt(k)))``. *checkpoint* as in
-    ``semantic_dedup_verdicts``: True cuts the shared member-frame
-    lineage (eager jobs at construction, blocks lost on executor
-    failure); False keeps composition lazy."""
-    v = _norm_frame(df, id_col, vec_col, "id", "vec")
-    fine = _norm_frame(centroids, id_col, vec_col, "cell", "cvec").withColumnRenamed(
-        "__norm", "cnorm"
-    )
-    co = _norm_frame(coarse, id_col, vec_col, "ccell", "covec").withColumnRenamed(
-        "__norm", "conorm"
-    )
-    # fine centroid -> coarse cell (k x k' evals — tiny, broadcast)
-    fine_as_v = fine.select(
-        F.col("cell").alias("id"), F.col("cvec").alias("vec"), F.col("cnorm").alias("__norm")
-    )
-    fine_route = _assign_nearest(
-        fine_as_v, co, cell_col="ccell", cvec_col="covec", cnorm_col="conorm"
-    ).select(
-        F.col("id").alias("cell"), "ccell"
-    )
-    fine_routed = fine.join(F.broadcast(fine_route), "cell")
-    # Vectors probe only coarse cells that OWN at least one fine
-    # centroid: Lloyd's empty-cell carryover can leave a coarse cell
-    # that is nobody's nearest, and a vector whose n_probe best cells
-    # were all member-less would lose every candidate in the inner join
-    # below — silently exempting it from dedup instead of routing it to
-    # its best non-empty neighborhood. The exact variant always assigns
-    # such a vector, so the probe set must never be vacuous.
-    co_used = co.join(F.broadcast(fine_route.select("ccell").distinct()), "ccell")
-    # vector -> top-n_probe coarse cells (n x k' evals, broadcast),
-    # CARRYING the vector and its norm through the min-struct (the
-    # kmeans_fit trick: payload fields never drive the comparison —
-    # negcos ties across cells carry the SAME row's vec/norm) while a
-    # sorted collect_list of tiny (negcos, ccell) structs yields the
-    # probe set; a corpus-sized re-join on id to recover the vector
-    # would otherwise shuffle the whole frame. The collect_list buffer
-    # is k' 16-byte structs per id — bounded by the coarse codebook,
-    # never by the corpus. sort_array ascending on (negcos, ccell) ==
-    # cosine DESC, ccell ASC — the oracle's ORDER BY with r <= n_probe.
-    from graph_db_spark.functions.vector import dot
-
-    codenom = F.col("__norm") * F.col("conorm")
-    v_probe = (
-        v.crossJoin(F.broadcast(co_used))
-        .withColumn(
-            "ccos",
-            F.round(F.when(codenom != 0, dot(F.col("vec"), F.col("covec")) / codenom), 6),
-        )
-        .filter(F.col("ccos").isNotNull())
-        .groupBy("id")
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("ccos")).alias("negcos"),
-                    F.col("vec"),
-                    F.col("__norm"),
-                )
-            ).alias("m"),
-            F.slice(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct((-F.col("ccos")).alias("negcos"), F.col("ccell"))
-                    )
-                ),
-                1,
-                n_probe,
-            ).alias("probe"),
-        )
-        .select(
-            "id",
-            F.col("m.vec").alias("vec"),
-            F.col("m.__norm").alias("__norm"),
-            F.explode(F.col("probe.ccell")).alias("ccell"),
-        )
-    )
-    # vector -> nearest fine centroid WITHIN its probed coarse cells:
-    # equi-join on ccell against the (broadcast) routed fine table, then
-    # the same min-struct pick across all candidates — n * n_probe*(k/k')
-    # evals, zero extra shuffle.
-    denom = F.col("__norm") * F.col("cnorm")
-    assign = (
-        v_probe.join(F.broadcast(fine_routed), "ccell")
-        .withColumn(
-            "ccos",
-            F.round(F.when(denom != 0, dot(F.col("vec"), F.col("cvec")) / denom), 6),
-        )
-        .filter(F.col("ccos").isNotNull())
-        .groupBy("id")
-        .agg(F.min(F.struct((-F.col("ccos")).alias("negcos"), F.col("cell"))).alias("m"))
-        .select("id", F.col("m.cell").alias("cell"), (-F.col("m.negcos")).alias("cent_cos"))
-    )
-    return _semdedup_from_assign(v, assign, tau, checkpoint=checkpoint)
-
-
 def semantic_pyramid_ks(
     n: int, cell_target: int = 1024, branch: int = 64
 ) -> list[int]:
@@ -1424,35 +1208,64 @@ def semantic_dedup_tree_verdicts(
     n_probe: int = 2,
     checkpoint: bool = True,
 ) -> DataFrame:
-    """SemDeDup with an ARBITRARY-DEPTH quantization pyramid — the
-    general form of ``semantic_dedup_hier_verdicts`` (which is exactly
-    the 2-level instance; depth 1 is ``semantic_dedup_verdicts``'s
-    exact assignment). *codebooks* is fine-level first: codebooks[0]
-    supplies the dedup cells, each later frame is a coarser quantizer
-    over the previous one (typically ``kmeans_fit(codebooks[i], ...)``).
+    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) over a quantization
+    pyramid of any depth. Returns one verdict row per vector: (id, cell,
+    cent_cos, pruned).
 
-    Routing: every level's centroids are routed to their nearest parent
-    cell (tiny broadcast joins); each vector probes its *n_probe* best
-    top-level cells (one broadcast cross join over ≤ branch cells),
-    then descends — at each level scoring only the CHILDREN of the
-    currently probed cells (broadcast equi-join on the parent id,
-    min-struct / sorted-slice picks, 6dp-rounded cosines with cell-id
-    tie-breaks) — and the fine level picks top-1 = the assignment. Per
-    vector that is ~n_probe·branch evaluations per level = O(branch ·
-    log_branch k) instead of the flat n·k (exact) or n·3·sqrt(k)
-    (2-level): with k ∝ n (constant cell size, see
-    ``semantic_pyramid_ks``) the route term stays n·polylog(n). Probe
-    sets are restricted per level to cells with ≥1 fine-level
-    descendant (the generalization of the 2-level route's non-vacuous
-    probe guard: Lloyd's empty-cell carryover can leave childless
-    cells, and a vector whose whole probe set were childless would
-    silently escape dedup). Approximation contract is the IVF n_probe
-    trade at every level; the pairwise prune is unchanged
-    (``_semdedup_from_assign``). All picks are deterministic and the
-    DuckDB oracle replicates the full descent bit-for-bit
-    (queries._semdedup_tree_sql)."""
-    from graph_db_spark.functions.vector import dot
+    *codebooks* is fine-level first: codebooks[0] supplies the dedup
+    cells, each later frame is a coarser quantizer over the previous one
+    (typically ``kmeans_fit(codebooks[i], ...)``). Depth 1 (``[cent]``)
+    is EXACT nearest-centroid assignment — the bounded recall baseline
+    for fixture-size corpora and verdict audits (its n·k assignment term
+    is a measured n^1.5 scale floor when k ∝ sqrt(n), SCALE_STRESS_r08/
+    r10). Depth 2 (``[cent, coarse]``, coarse k' ~ sqrt(k)) is the
+    two-level hierarchical route: n·(k' + n_probe·k/k') ~ n·3·sqrt(k)
+    cosine evaluations at n_probe=2. ``semantic_dedup`` below builds the
+    pyramid for a production corpus.
 
+    Each vector is assigned to a fine centroid by cosine (rounded to 6dp,
+    ties on cell id — the ``ivf_assign`` contract; every pick is the
+    shared cosine step of ``similarity``). Within a cell, members are
+    ordered by (cent_cos ASC, id ASC) and a vector is PRUNED when some
+    earlier member of its cell has cosine >= tau to it — i.e. the kept
+    representative of each near-dup group is the one LEAST similar to
+    the centroid (the paper's default keep-rule: keeping cluster
+    outliers preserves diversity; Table 1 shows the keep-low/keep-high/
+    random choice barely matters). Degenerate vectors (zero-norm -> NULL
+    cosine) get no assignment and are emitted with NULL cell, cent_cos,
+    and pruned=false.
+
+    Routing at depth > 1: every level's centroids are routed to their
+    nearest parent cell (tiny broadcast joins); each vector probes its
+    *n_probe* best top-level cells (one broadcast cross join over ≤
+    branch cells), then descends — at each level scoring only the
+    CHILDREN of the currently probed cells (broadcast equi-join on the
+    parent id, min-struct / sorted-slice picks) — and the fine level
+    picks top-1 = the assignment. Per vector that is ~n_probe·branch
+    evaluations per level = O(branch · log_branch k) instead of the flat
+    n·k: with k ∝ n (constant cell size, see ``semantic_pyramid_ks``)
+    the route term stays n·polylog(n). Probe sets are restricted per
+    level to cells with ≥1 fine-level descendant: Lloyd's empty-cell
+    carryover can leave childless cells, and a vector whose whole probe
+    set were childless would silently escape dedup. Approximation
+    contract is the IVF n_probe trade at every level: verdicts differ
+    from depth 1 only for vectors whose true nearest fine centroid lies
+    outside the probed subtree (n_probe=2 agrees on 94.6% of verdicts
+    even on the worst-case tiny fixture, k=8/k'=3, vs 87.7% at
+    n_probe=1). The pairwise prune is the same at every depth
+    (``_semdedup_from_assign``): the member frame shuffles ONCE on cell
+    id for the within-cell equi-join, and pairwise work is
+    sum(|cell|^2). All picks are deterministic and the DuckDB oracles
+    replicate depth 1 (dedup_semantic_semdedup), depth 2
+    (dedup_semantic_semdedup_hier) and any depth
+    (queries._semdedup_tree_sql) bit-for-bit.
+
+    *checkpoint* (default True) localCheckpoints the shared member frame
+    — without the cut every consumer re-runs the scan+assignment
+    subtree. Caveats: the cut EXECUTES Spark jobs at plan-construction
+    time, and localCheckpoint blocks are lost on executor failure. Pass
+    checkpoint=False when merely composing plans or running on
+    preemptible executors (kmeans_fit exposes the same escape hatch)."""
     if not codebooks:
         raise ValueError("codebooks must be non-empty (fine level first)")
     v = _norm_frame(df, id_col, vec_col, "id", "vec")
@@ -1464,7 +1277,7 @@ def semantic_dedup_tree_verdicts(
     ]
     depth = len(lv)
     if depth == 1:
-        return _semdedup_from_assign(v, _assign_nearest(v, lv[0]), tau, checkpoint=checkpoint)
+        return _semdedup_from_assign(v, _cos_nearest(v, lv[0]), tau, checkpoint=checkpoint)
 
     # child cell -> parent cell per level (k_i x k_{i+1} evals — tiny,
     # all broadcast); children of distinct parents are disjoint, so the
@@ -1477,7 +1290,7 @@ def semantic_dedup_tree_verdicts(
             F.col("cnorm").alias("__norm"),
         )
         routes.append(
-            _assign_nearest(child_as_v, lv[i + 1]).select(
+            _cos_nearest(child_as_v, lv[i + 1]).select(
                 F.col("id").alias("child"), F.col("cell").alias("parent")
             )
         )
@@ -1491,13 +1304,6 @@ def semantic_dedup_tree_verdicts(
             .distinct()
         )
 
-    def scored(frame: DataFrame) -> DataFrame:
-        denom = F.col("__norm") * F.col("cnorm")
-        return frame.withColumn(
-            "ccos",
-            F.round(F.when(denom != 0, dot(F.col("vec"), F.col("cvec")) / denom), 6),
-        ).filter(F.col("ccos").isNotNull())
-
     def probe_pick(frame: DataFrame) -> DataFrame:
         # top-n_probe cells per id, CARRYING vec/__norm through the
         # min-struct (payload fields never drive the comparison — negcos
@@ -1505,7 +1311,8 @@ def semantic_dedup_tree_verdicts(
         # collect_list of tiny (negcos, cell) structs is bounded by the
         # candidate set (≤ n_probe·branch), never by the corpus.
         return (
-            frame.groupBy("id")
+            _cos_scored(frame)
+            .groupBy("id")
             .agg(
                 F.min(
                     F.struct(
@@ -1534,22 +1341,19 @@ def semantic_dedup_tree_verdicts(
     top = lv[depth - 1].join(
         F.broadcast(used[depth - 1].withColumnRenamed("parent", "cell")), "cell"
     )
-    cur = probe_pick(scored(v.crossJoin(F.broadcast(top))))
+    cur = probe_pick(v.crossJoin(F.broadcast(top)))
     # descend: candidates at level j = children of the probed cells
     for j in range(depth - 2, 0, -1):
         cand = lv[j].join(
             F.broadcast(used[j].withColumnRenamed("parent", "cell")), "cell"
         ).join(F.broadcast(routes[j].withColumnRenamed("child", "cell")), "cell")
         cur = probe_pick(
-            scored(cur.join(F.broadcast(cand.withColumnRenamed("parent", "pcell")), "pcell"))
+            cur.join(F.broadcast(cand.withColumnRenamed("parent", "pcell")), "pcell")
         )
     # fine level: top-1 among the probed cells' children = assignment
     fine = lv[0].join(F.broadcast(routes[0].withColumnRenamed("child", "cell")), "cell")
-    assign = (
-        scored(cur.join(F.broadcast(fine.withColumnRenamed("parent", "pcell")), "pcell"))
-        .groupBy("id")
-        .agg(F.min(F.struct((-F.col("ccos")).alias("negcos"), F.col("cell"))).alias("m"))
-        .select("id", F.col("m.cell").alias("cell"), (-F.col("m.negcos")).alias("cent_cos"))
+    assign = _cos_min(
+        _cos_scored(cur.join(F.broadcast(fine.withColumnRenamed("parent", "pcell")), "pcell"))
     )
     return _semdedup_from_assign(v, assign, tau, checkpoint=checkpoint)
 
@@ -1582,9 +1386,10 @@ def semantic_dedup(
     broadcasts or shuffles once on cell id. Returns the verdict frame
     (id, cell, cent_cos, pruned).
 
-    ``semantic_dedup_verdicts`` (exact assignment) remains the bounded
-    recall BASELINE for fixture-size corpora and verdict audits;
-    ``semantic_dedup_hier_verdicts`` is the fixed 2-level instance.
+    ``semantic_dedup_tree_verdicts`` with hand-built codebooks gives the
+    exact route (``[cent]``, the bounded recall BASELINE for fixture-size
+    corpora and verdict audits) and the fixed 2-level route
+    (``[cent, coarse]``).
 
     One count() job derives k and the sample modulus; pass *k* (and
     optionally *sample_target*) to skip it. *k* given explicitly still

@@ -234,6 +234,29 @@ def _sq_l2(a, b):
     )
 
 
+def _l2_nearest(
+    v: DataFrame, vec: str, book: DataFrame, cell: str, cvec: str, out: str | None = None
+) -> DataFrame:
+    """(id, *out*): each row of *v* (id, *vec*) assigned to its L2-nearest
+    row of the k-row *book* (*cell*, *cvec*) — the one assignment step of
+    ``kmeans_assign``, the IVF-PQ coarse quantizer and every ``pq_encode``
+    subspace. One broadcast of the codebook into the scan, the
+    sequential-fold squared distance (``_sq_l2``), and a map-side
+    combinable min over the (d, cell) struct, so ties break on cell asc.
+    NULL distances (a ragged vector, or one with a NULL element) are
+    dropped first: struct-min sorts NULL before every value, so without
+    the filter such a row would be coded as the lowest cell. Those rows
+    get no assignment."""
+    return (
+        v.crossJoin(F.broadcast(book))
+        .withColumn("d", _sq_l2(F.col(vec), F.col(cvec)))
+        .filter(F.col("d").isNotNull())
+        .groupBy("id")
+        .agg(F.min(F.struct("d", cell)).alias("mm"))
+        .select("id", F.col(f"mm.{cell}").alias(out or cell))
+    )
+
+
 def pq_fit(
     df: DataFrame,
     m: int = 2,
@@ -295,11 +318,14 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """PQ encode: per subspace, the L2-nearest codeword (ties on cell id —
-    the kmeans assignment contract). Returns (id, c0..c{m-1}). Each
-    subspace assignment is one broadcast of the k-row codebook into the
-    corpus scan + a min-struct agg — no shuffle beyond the id group."""
-    m = len(books)
+    """PQ encode: per subspace, the L2-nearest codeword through the shared
+    assignment step ``_l2_nearest`` (ties on cell id — the
+    ``kmeans_assign`` contract). Returns (id, c0..c{m-1}). Each subspace
+    assignment is one broadcast of the k-row codebook into the corpus
+    scan + a min-struct agg — no shuffle beyond the id group. A vector
+    with a NULL distance in some subspace (ragged, or a NULL element)
+    gets no code there, so it has no row at all and never enters an ADC
+    candidate set."""
     dim_w: list[int] = []
     out = None
     for s, cb in enumerate(books):
@@ -309,15 +335,49 @@ def pq_encode(
         v = df.select(
             F.col(id_col).alias("id"), F.slice(F.col(vec_col), start, w).alias("vec")
         )
-        enc = (
-            v.crossJoin(F.broadcast(cb))
-            .withColumn("d", _sq_l2(F.col("vec"), F.col("cvec")))
-            .groupBy("id")
-            .agg(F.min(F.struct("d", "cell")).alias("mm"))
-            .select("id", F.col("mm.cell").alias(f"c{s}"))
-        )
+        enc = _l2_nearest(v, "vec", cb, "cell", "cvec", out=f"c{s}")
         out = enc if out is None else out.join(enc, "id")
     return out
+
+
+def _adc_topk(
+    cand: DataFrame, qsrc: DataFrame, qvec: str, books: list[DataFrame], k: int
+) -> DataFrame:
+    """The ADC scorer shared by every PQ route: per subspace s, a distance
+    table (the *qsrc* key columns, c{s}, d{s}) of the query slice against
+    codebook s (9dp-rounded squared L2, broadcast), joined into the
+    candidate frame *cand* (id, c0..c{m-1}, plus any of qid / ccell) on
+    c{s} and whichever of qid / ccell both sides carry; then the 9dp
+    lookup-sum and the (adc, nid) tie-broken top-k per query, self-matches
+    (nid = qid) excluded. *qsrc* holds the query vectors in *qvec* plus
+    the table keys: (qid) for raw PQ, (qid, ccell) for residual tables,
+    one per probed cell. Returns (qid, nid, adc)."""
+    keys = [c for c in qsrc.columns if c != qvec]
+    dim_w = [_book_dim(cb) for cb in books]
+    adc = cand
+    for s, cb in enumerate(books):
+        start = sum(dim_w[:s]) + 1
+        qd = (
+            qsrc.select(*keys, F.slice(F.col(qvec), start, dim_w[s]).alias("qv"))
+            .crossJoin(F.broadcast(cb))
+            .select(
+                *keys,
+                F.col("cell").alias(f"c{s}"),
+                F.round(_sq_l2(F.col("qv"), F.col("cvec")), 9).alias(f"d{s}"),
+            )
+        )
+        on = [c for c in keys if c in adc.columns] + [f"c{s}"]
+        adc = adc.join(F.broadcast(qd), on)
+    total = F.round(sum(F.col(f"d{s}") for s in range(len(books))), 9)
+    scored = adc.filter(F.col("id") != F.col("qid")).select(
+        "qid", F.col("id").alias("nid"), total.alias("adc")
+    )
+    w = W.partitionBy("qid").orderBy(F.col("adc").asc(), F.col("nid").asc())
+    return (
+        scored.select("qid", "nid", "adc", F.row_number().over(w).alias("rk"))
+        .filter(F.col("rk") <= k)
+        .select("qid", "nid", "adc")
+    )
 
 
 def pq_adc_topk(
@@ -337,49 +397,16 @@ def pq_adc_topk(
     distances rounded 9dp for cross-engine hash stability. Self-matches
     (nid = qid) are excluded."""
     coded = pq_encode(df, books, id_col, vec_col)
-    m = len(books)
-    dim_w = [_book_dim(cb) for cb in books]
-    adc = None
-    for s, cb in enumerate(books):
-        start = sum(dim_w[:s]) + 1
-        qd = (
-            queries.select(
-                F.col(id_col).alias("qid"),
-                F.slice(F.col(vec_col), start, dim_w[s]).alias("qv"),
-            )
-            .crossJoin(F.broadcast(cb))
-            .select(
-                "qid",
-                F.col("cell").alias(f"c{s}"),
-                F.round(_sq_l2(F.col("qv"), F.col("cvec")), 9).alias(f"d{s}"),
-            )
-        )
-        adc = coded.join(F.broadcast(qd), f"c{s}") if adc is None else adc.join(
-            F.broadcast(qd), ["qid", f"c{s}"]
-        )
-    total = F.round(sum(F.col(f"d{s}") for s in range(m)), 9)
-    scored = adc.filter(F.col("id") != F.col("qid")).select(
-        "qid", F.col("id").alias("nid"), total.alias("adc")
-    )
-    w = W.partitionBy("qid").orderBy(F.col("adc").asc(), F.col("nid").asc())
-    return (
-        scored.select("qid", "nid", "adc", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") <= k)
-        .select("qid", "nid", "adc")
-    )
+    qv = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
+    return _adc_topk(coded, qv, "qvec", books, k)
 
 
-def _coarse_assign(v: DataFrame, cc: DataFrame) -> DataFrame:
-    """(id, ccell): each vector's L2-nearest coarse cell (unrounded
-    distances, tie on cell — the kmeans assignment convention). One
-    broadcast of the k-row coarse codebook into the corpus scan +
-    a min-struct agg; shared by both IVF-PQ variants."""
-    return (
-        v.crossJoin(F.broadcast(cc))
-        .withColumn("d", _sq_l2(F.col("vec"), F.col("ccvec")))
-        .groupBy("id")
-        .agg(F.min(F.struct("d", "ccell")).alias("mm"))
-        .select("id", F.col("mm.ccell").alias("ccell"))
+def _coarse_book(coarse: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(ccell, ccvec): a ``kmeans_fit`` coarse codebook renamed for the
+    IVF-PQ routes, keeping its driver-held rows."""
+    return _carry_codebook(
+        coarse,
+        coarse.select(F.col(id_col).alias("ccell"), F.col(vec_col).alias("ccvec")),
     )
 
 
@@ -419,43 +446,52 @@ def ivfpq_adc_topk(
     tie-break on cell, the probe list on (distance, cell), the final
     cut on (adc, nid); *coarse* comes from ``kmeans_fit`` and *books*
     from ``pq_fit``, so a SQL oracle re-derives everything."""
-    cc = _carry_codebook(
-        coarse,
-        coarse.select(F.col(id_col).alias("ccell"), F.col(vec_col).alias("ccvec")),
-    )
+    cc = _coarse_book(coarse, id_col, vec_col)
     v = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    corpus_cells = _coarse_assign(v, cc)
+    corpus_cells = _l2_nearest(v, "vec", cc, "ccell", "ccvec")
     qv = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
     probes = _coarse_probes(qv, cc, n_probe)
     coded = pq_encode(df, books, id_col, vec_col).join(corpus_cells, "id")
-    m = len(books)
-    dim_w = [_book_dim(cb) for cb in books]
-    adc = coded.join(F.broadcast(probes), "ccell")
-    for s, cb in enumerate(books):
-        start = sum(dim_w[:s]) + 1
-        qd = (
-            queries.select(
-                F.col(id_col).alias("qid"),
-                F.slice(F.col(vec_col), start, dim_w[s]).alias("qv"),
-            )
-            .crossJoin(F.broadcast(cb))
-            .select(
-                "qid",
-                F.col("cell").alias(f"c{s}"),
-                F.round(_sq_l2(F.col("qv"), F.col("cvec")), 9).alias(f"d{s}"),
-            )
+    return _adc_topk(coded.join(F.broadcast(probes), "ccell"), qv, "qvec", books, k)
+
+
+def _residual_codes(
+    df: DataFrame,
+    cc: DataFrame,
+    m: int,
+    n_codes: int,
+    n_iters: int,
+    sample_mod: int | None,
+    id_col: str,
+    vec_col: str,
+    checkpoint: bool,
+) -> tuple[list[DataFrame], DataFrame]:
+    """The corpus half of residual IVF-PQ, shared by the in-query route
+    and the store writer: each vector's L2-nearest coarse cell, its
+    residual r = v − centroid(cell) (element-wise IEEE doubles), PQ books
+    trained on the residuals, and the codes. Returns (books, coded) with
+    coded = (id, c0..c{m-1}, ccell). *checkpoint* localCheckpoints the
+    residual frame, which the PQ fits and the encode all read."""
+    v = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    resid = (
+        v.join(_l2_nearest(v, "vec", cc, "ccell", "ccvec"), "id")
+        .join(F.broadcast(cc), "ccell")
+        .select(
+            "id",
+            "ccell",
+            F.zip_with("vec", "ccvec", lambda a, b: a - b).alias("r"),
         )
-        adc = adc.join(F.broadcast(qd), ["qid", f"c{s}"])
-    total = F.round(sum(F.col(f"d{s}") for s in range(m)), 9)
-    scored = adc.filter(F.col("id") != F.col("qid")).select(
-        "qid", F.col("id").alias("nid"), total.alias("adc")
     )
-    w = W.partitionBy("qid").orderBy(F.col("adc").asc(), F.col("nid").asc())
-    return (
-        scored.select("qid", "nid", "adc", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") <= k)
-        .select("qid", "nid", "adc")
+    if checkpoint:
+        resid = resid.localCheckpoint()
+    resid_v = resid.select(F.col("id").alias(id_col), F.col("r").alias(vec_col))
+    books = pq_fit(
+        resid_v, m=m, n_codes=n_codes, n_iters=n_iters, sample_mod=sample_mod
     )
+    coded = pq_encode(resid_v, books, id_col, vec_col).join(
+        resid.select("id", "ccell"), "id"
+    )
+    return books, coded
 
 
 def ivfpq_residual_topk(
@@ -510,30 +546,9 @@ def ivfpq_residual_topk(
     ``ivfpq_residual_topk_persisted`` below (result-identical,
     pytest-pinned). Same caveats as ``kmeans_fit``: executes at
     plan-construction time; blocks die with executors."""
-    cc = _carry_codebook(
-        coarse,
-        coarse.select(F.col(id_col).alias("ccell"), F.col(vec_col).alias("ccvec")),
-    )
-    v = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    corpus_cells = _coarse_assign(v, cc)
-    # residual frame: r = v − centroid(cell), element-wise IEEE doubles
-    resid = (
-        v.join(corpus_cells, "id")
-        .join(F.broadcast(cc), "ccell")
-        .select(
-            "id",
-            "ccell",
-            F.zip_with("vec", "ccvec", lambda a, b: a - b).alias("r"),
-        )
-    )
-    if checkpoint:
-        resid = resid.localCheckpoint()
-    resid_v = resid.select(F.col("id").alias(id_col), F.col("r").alias(vec_col))
-    books = pq_fit(
-        resid_v, m=m, n_codes=n_codes, n_iters=n_iters, sample_mod=sample_mod
-    )
-    coded = pq_encode(resid_v, books, id_col, vec_col).join(
-        resid.select("id", "ccell"), "id"
+    cc = _coarse_book(coarse, id_col, vec_col)
+    books, coded = _residual_codes(
+        df, cc, m, n_codes, n_iters, sample_mod, id_col, vec_col, checkpoint
     )
     return _residual_adc_topk(coded, cc, books, queries, k, n_probe, id_col, vec_col)
 
@@ -556,7 +571,6 @@ def _residual_adc_topk(
     routes are result-identical because everything corpus-side (coarse
     assignment, residuals, PQ books, codes) is a pure function the store
     merely caches."""
-    m = len(books)
     qv = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
     probes = _coarse_probes(qv, cc, n_probe)
     # per-(query, probed cell) residual: qr = q − centroid(probed cell)
@@ -565,33 +579,7 @@ def _residual_adc_topk(
         "ccell",
         F.zip_with("qvec", "ccvec", lambda a, b: a - b).alias("qr"),
     )
-    dim_w = [_book_dim(cb) for cb in books]
-    adc = coded.join(F.broadcast(probes), "ccell")
-    for s, cb in enumerate(books):
-        start = sum(dim_w[:s]) + 1
-        qd = (
-            qres.select(
-                "qid", "ccell", F.slice("qr", start, dim_w[s]).alias("qv")
-            )
-            .crossJoin(F.broadcast(cb))
-            .select(
-                "qid",
-                "ccell",
-                F.col("cell").alias(f"c{s}"),
-                F.round(_sq_l2(F.col("qv"), F.col("cvec")), 9).alias(f"d{s}"),
-            )
-        )
-        adc = adc.join(F.broadcast(qd), ["qid", "ccell", f"c{s}"])
-    total = F.round(sum(F.col(f"d{s}") for s in range(m)), 9)
-    scored = adc.filter(F.col("id") != F.col("qid")).select(
-        "qid", F.col("id").alias("nid"), total.alias("adc")
-    )
-    w = W.partitionBy("qid").orderBy(F.col("adc").asc(), F.col("nid").asc())
-    return (
-        scored.select("qid", "nid", "adc", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") <= k)
-        .select("qid", "nid", "adc")
-    )
+    return _adc_topk(coded.join(F.broadcast(probes), "ccell"), qres, "qr", books, k)
 
 
 def ivfpq_residual_store_write(
@@ -630,25 +618,11 @@ def ivfpq_residual_store_write(
         df, k=coarse_k, n_iters=n_iters, id_col=id_col, vec_col=vec_col,
         sample_mod=sample_mod, sample_target=sample_target,
     )
-    cc = _carry_codebook(
-        coarse,
-        coarse.select(F.col(id_col).alias("ccell"), F.col(vec_col).alias("ccvec")),
-    )
-    v = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    resid = (
-        v.join(_coarse_assign(v, cc), "id")
-        .join(F.broadcast(cc), "ccell")
-        .select(
-            "id",
-            "ccell",
-            F.zip_with("vec", "ccvec", lambda a, b: a - b).alias("r"),
-        )
-        .localCheckpoint()  # write-time only: the PQ fits + encode below
-        # re-read it ~10×; queries never pay this
-    )
-    resid_v = resid.select(F.col("id").alias(id_col), F.col("r").alias(vec_col))
-    books = pq_fit(
-        resid_v, m=m, n_codes=n_codes, n_iters=n_iters, sample_mod=sample_mod
+    cc = _coarse_book(coarse, id_col, vec_col)
+    # the residual frame is always checkpointed here: write-time only, the
+    # PQ fits + encode re-read it ~10×; queries never pay this
+    books, coded = _residual_codes(
+        df, cc, m, n_codes, n_iters, sample_mod, id_col, vec_col, checkpoint=True
     )
     cc.write.mode("errorifexists").parquet(os.path.join(path, "coarse"))
     b_all = None
@@ -656,12 +630,8 @@ def ivfpq_residual_store_write(
         bs = cb.select(F.lit(s).alias("s"), "cell", "cvec")
         b_all = bs if b_all is None else b_all.unionByName(bs)
     b_all.write.mode("errorifexists").parquet(os.path.join(path, "books"))
-    (
-        pq_encode(resid_v, books, id_col, vec_col)
-        .join(resid.select("id", "ccell"), "id")
-        .write.mode("errorifexists")
-        .partitionBy("ccell")
-        .parquet(os.path.join(path, "codes"))
+    coded.write.mode("errorifexists").partitionBy("ccell").parquet(
+        os.path.join(path, "codes")
     )
 
 
@@ -711,6 +681,44 @@ def ivfpq_residual_topk_persisted(
     return _residual_adc_topk(coded, cc, books, queries, k, n_probe, id_col, vec_col)
 
 
+def _cos_scored(frame: DataFrame) -> DataFrame:
+    """*frame* (vec, __norm, cvec, cnorm, ...) with ccos = cosine(vec,
+    cvec) rounded to 6dp, rows with a NULL ccos dropped. The division is
+    guarded: a zero-norm vector (or degenerate centroid) yields a NULL
+    cosine — the documented no-assignment contract — not an ANSI
+    divide-by-zero error (Spark 4 defaults ansi=true)."""
+    denom = F.col("__norm") * F.col("cnorm")
+    return frame.withColumn(
+        "ccos",
+        F.round(F.when(denom != 0, _dot(F.col("vec"), F.col("cvec")) / denom), 6),
+    ).filter(F.col("ccos").isNotNull())
+
+
+def _cos_min(scored: DataFrame) -> DataFrame:
+    """(id, cell, cent_cos): per id, the scored row of highest cosine.
+    The min over a (−ccos, cell) struct is map-side combinable — the
+    scored rows collapse to ≤1 per id and partition before the exchange,
+    with no sort — and lexicographic, so ties on cosine break on cell
+    asc, the same order as ``ivf_assign``'s window (oracle-stable). NULL
+    cosines were dropped by ``_cos_scored``: struct-min sorts NULL fields
+    first, so one degenerate centroid would otherwise capture every
+    vector."""
+    return (
+        scored.groupBy("id")
+        .agg(F.min(F.struct((-F.col("ccos")).alias("negcos"), F.col("cell"))).alias("m"))
+        .select("id", F.col("m.cell").alias("cell"), (-F.col("m.negcos")).alias("cent_cos"))
+    )
+
+
+def _cos_nearest(v: DataFrame, c: DataFrame) -> DataFrame:
+    """(id, cell, cent_cos): each vector of *v* (id, vec, __norm) assigned
+    to its cosine-nearest row of the small centroid frame *c* (cell,
+    cvec, cnorm), broadcast — the one cosine assignment step of
+    ``ivf_assign`` (n_probe = 1), the semantic-dedup store and the
+    SemDeDup descent. Vectors whose every cosine is NULL get no row."""
+    return _cos_min(_cos_scored(v.crossJoin(F.broadcast(c))))
+
+
 def ivf_assign(
     df: DataFrame,
     centroids: DataFrame,
@@ -720,44 +728,22 @@ def ivf_assign(
 ) -> DataFrame:
     """Assign each vector to its *n_probe* nearest centroid cells by
     cosine (rounded to 6dp, ties broken by centroid id — deterministic
-    across engines). One broadcast cross join vs the (small) centroid set
-    + a per-vector top-n window. Returns (id, cell, cell_rank)."""
+    across engines). One broadcast cross join vs the (small) centroid
+    set; n_probe = 1 is the shared min-struct step ``_cos_nearest``, a
+    larger n_probe a per-vector top-n window. Zero-norm vectors get no
+    row. Returns (id, cell, cell_rank)."""
     v = with_norm(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")), "vec")
     c = with_norm(
         centroids.select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cvec")), "cvec"
     ).withColumnRenamed("__norm", "cnorm")
-    # Guarded division: a zero-norm vector (or degenerate centroid) must
-    # yield NULL cosine — the documented no-assignment contract — not an
-    # ANSI divide-by-zero error (Spark 4 defaults ansi=true; the fixture
-    # corpora never hit this, a labeled corpus with a zeroed row does).
-    _denom = F.col("__norm") * F.col("cnorm")
-    scored = v.crossJoin(F.broadcast(c)).withColumn(
-        "ccos",
-        F.round(F.when(_denom != 0, _dot(F.col("vec"), F.col("cvec")) / _denom), 6),
-    )
     if n_probe == 1:
-        # Corpus-sized assignment: min over a (−cos, cell) struct is
-        # map-side combinable — the N×k scored rows collapse to ≤N per
-        # partition before the exchange, and there is no sort. Struct
-        # comparison is lexicographic, so ties on cos break on cell asc
-        # (same order as the window below — oracle-stable). NULL cosines
-        # (zero-norm/degenerate centroid → div-by-zero → NULL) are
-        # filtered FIRST: struct-min sorts NULL fields before values,
-        # where the window's desc ordering puts them last — without the
-        # filter one degenerate centroid would capture every vector.
-        return (
-            scored.filter(F.col("ccos").isNotNull())
-            .groupBy("id")
-            .agg(F.min(F.struct((-F.col("ccos")).alias("negcos"), F.col("cell"))).alias("m"))
-            .select("id", F.col("m.cell").alias("cell"), F.lit(1).alias("cell_rank"))
-        )
+        return _cos_nearest(v, c).select("id", "cell", F.lit(1).alias("cell_rank"))
     w = W.partitionBy("id").orderBy(F.col("ccos").desc(), F.col("cell").asc())
-    # Same degenerate-input contract as the n_probe==1 branch: a vector
-    # whose cosines are ALL NULL (zero norm) gets no assignment row at
-    # all, rather than a NULL-ranked one (desc puts NULLs last, so an
-    # all-NULL group would still rank its first row).
+    # NULL cosines are dropped before the window: an all-NULL (zero-norm)
+    # vector gets no row at all, rather than a NULL-ranked one (desc puts
+    # NULLs last, so an all-NULL group would still rank its first row).
     return (
-        scored.filter(F.col("ccos").isNotNull())
+        _cos_scored(v.crossJoin(F.broadcast(c)))
         .withColumn("cell_rank", F.row_number().over(w))
         .filter(F.col("cell_rank") <= n_probe)
         .select("id", "cell", "cell_rank")
@@ -914,13 +900,11 @@ def _driver_rows_as_parquet(spark, rows, spark_schema, prefix: str) -> DataFrame
     return spark.read.schema(spark_schema).parquet(d)
 
 
-def _np_l2_argmin_assign(
-    df_v: DataFrame, cents: dict, cell_cast: str, carry_v: bool = True
-) -> DataFrame | None:
-    """(cell[, v]) rows: each row of *df_v* (schema: v ARRAY<DOUBLE>, plus
-    whatever else) assigned to its L2-nearest centroid of the driver-held
-    codebook *cents* — VALUE-IDENTICAL to the crossJoin + (d, cell)
-    struct-min formulation, executed as one map-only Arrow/numpy stage.
+def _np_l2_argmin(X, C):
+    """Row index of each row of *X* (n x L) into its L2-nearest row of the
+    cell-ascending codebook *C* (k x L) — the numpy twin of
+    ``_l2_nearest``, shared by the Arrow assignment stage and the driver
+    pool.
 
     Why numpy (guide §4.2, and the repo's documented exception precedent,
     functions/vector.hyperplane_signatures_multi): the distance kernel is
@@ -934,7 +918,25 @@ def _np_l2_argmin_assign(
     first-minimum over the cell-ascending codebook == the struct-min
     tie-break). NaN distances map to +inf before argmin, reproducing the
     JVM ordering's NaN-sorts-last (an all-NaN row picks the lowest cell,
-    exactly like the struct-min).
+    exactly like the struct-min)."""
+    import numpy as np
+
+    acc = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
+    for d in range(C.shape[1]):  # sequential over dims == the JVM fold order
+        t = X[:, d, None] - C[None, :, d]
+        acc = acc + t * t
+    np.copyto(acc, np.inf, where=np.isnan(acc))
+    return np.argmin(acc, axis=1)  # first min == lowest cell id
+
+
+def _np_l2_argmin_assign(
+    df_v: DataFrame, cents: dict, cell_cast: str, carry_v: bool = True
+) -> DataFrame | None:
+    """(cell[, v]) rows: each row of *df_v* (schema: v ARRAY<DOUBLE>, plus
+    whatever else) assigned to its L2-nearest centroid of the driver-held
+    codebook *cents* — VALUE-IDENTICAL to the crossJoin + (d, cell)
+    struct-min formulation, executed as one map-only Arrow/numpy stage
+    (kernel: ``_np_l2_argmin``).
 
     The JVM-side pre-filter `size(v) == L AND no null element` reproduces
     the fold's NULL contract exactly: a ragged or null-padded vector gets
@@ -963,6 +965,13 @@ def _np_l2_argmin_assign(
     pre = df_v.filter(
         (F.size("v") == L) & ~F.exists("v", lambda x: x.isNull())
     ).select("v")
+    # the closure below references the module-level kernel: ship it by
+    # value, so Python workers need not have this package on their path
+    import sys
+
+    from pyspark import cloudpickle
+
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
     def assign(batches):
         import pandas as pd
@@ -971,12 +980,7 @@ def _np_l2_argmin_assign(
             if pdf.empty:
                 continue
             X = np.stack([np.asarray(r, dtype=np.float64) for r in pdf["v"]])
-            acc = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
-            for d in range(L):  # sequential over dims == the JVM fold order
-                t = X[:, d, None] - C[None, :, d]
-                acc = acc + t * t
-            np.copyto(acc, np.inf, where=np.isnan(acc))
-            idx = np.argmin(acc, axis=1)  # first min == lowest cell id
+            idx = _np_l2_argmin(X, C)
             out = {"cell": cell_ids[idx].astype(np_cell)}
             if carry_v:
                 out["v"] = list(pdf["v"])
@@ -990,11 +994,10 @@ def _np_l2_argmin_assign(
 
 
 def _np_l2_argmin_local(pool: list, cents: dict, L: int) -> list:
-    """Driver-side twin of ``_np_l2_argmin_assign``'s kernel for a
-    driver-held row pool (a carried codebook or a small fit sample): same numpy
-    arithmetic — sequential per-dim accumulation (the JVM fold order),
-    NaN→inf before the first-minimum argmin — same pre-filter (length-L,
-    no null elements), zero Spark jobs. Returns [(cell, vec), ...]."""
+    """Driver-side twin of ``_np_l2_argmin_assign`` for a driver-held row
+    pool (a carried codebook or a small fit sample): the same kernel
+    (``_np_l2_argmin``) after the same pre-filter (length-L, no null
+    elements), zero Spark jobs. Returns [(cell, vec), ...]."""
     import numpy as np
 
     rows = [
@@ -1007,13 +1010,7 @@ def _np_l2_argmin_local(pool: list, cents: dict, L: int) -> list:
     order = sorted(cents)
     C = np.array([cents[c] for c in order], dtype=np.float64)
     cell_ids = [int(c) for c in order]
-    X = np.array(rows, dtype=np.float64)
-    acc = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
-    for d in range(L):
-        t = X[:, d, None] - C[None, :, d]
-        acc = acc + t * t
-    np.copyto(acc, np.inf, where=np.isnan(acc))
-    idx = np.argmin(acc, axis=1)
+    idx = _np_l2_argmin(np.array(rows, dtype=np.float64), C)
     return [(cell_ids[i], vec) for i, vec in zip(idx, rows)]
 
 
@@ -1500,11 +1497,7 @@ def kmeans_fit(
             F.col("id").alias("cell"), F.col("v").alias("c")
         )
         v_fit = v
-    dist = F.aggregate(
-        F.zip_with(F.col("v"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dist = _sq_l2(F.col("v"), F.col("c"))
     for _ in range(n_iters):
         # Nearest-centroid pick via a min-struct aggregation instead of a
         # row_number window: map-side partial combine collapses the N×k
@@ -1586,11 +1579,7 @@ def kmeans_fit(
     if chk["nd"] != chk["n"] or (
         sample_mod is not None and chk["n"] and chk["mx"] != chk["n"] - 1
     ):
-        raise ValueError(
-            f"kmeans_fit: corrupt codebook — duplicate values in id column "
-            f"{id_col!r} violate the unique-id precondition; dedupe first "
-            f"(df.groupBy({id_col!r}).agg(F.first(vec)))"
-        )
+        raise ValueError(_KMEANS_DUP_MSG.format(id_col=id_col))
     return out
 
 def kmeans_assign(
@@ -1600,16 +1589,17 @@ def kmeans_assign(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Final cluster membership for a trained ``kmeans_fit`` codebook:
-    (id, cell) by EUCLIDEAN nearest centroid — exactly the assignment
-    rule Lloyd's iterations use internally (sequential-fold squared
-    distance, ties on cell asc), so membership agrees with the fit and
-    with the oracle's `a{n}` CTE. Distinct from ``ivf_assign``, which
-    ranks by COSINE (the ANN probe contract).
+    (id, cell) by EUCLIDEAN nearest centroid — the shared L2 step
+    ``_l2_nearest`` that ``pq_encode`` and the IVF-PQ coarse quantizer
+    also use, and the assignment rule Lloyd's iterations use internally
+    (sequential-fold squared distance, ties on cell asc), so membership
+    agrees with the fit and with the oracle's `a{n}` CTE. Distinct from
+    ``ivf_assign``, which ranks by COSINE (the ANN probe contract).
 
     Scale shape: centroids broadcast, the min-struct agg is map-side
     combinable — one corpus scan, the only exchange carries <=1 row per
-    vector. Degenerate rows (ragged dims -> NULL distance) get no
-    assignment, matching kmeans_fit's own filter."""
+    vector. Degenerate rows (ragged dims or a NULL element -> NULL
+    distance) get no assignment, matching kmeans_fit's own filter."""
     v = df.select(
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
@@ -1618,19 +1608,7 @@ def kmeans_assign(
         F.col(id_col).alias("cell"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("c"),
     )
-    dist = F.aggregate(
-        F.zip_with(F.col("v"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        v.crossJoin(F.broadcast(cent))
-        .withColumn("d", dist)
-        .filter(F.col("d").isNotNull())
-        .groupBy("id")
-        .agg(F.min(F.struct(F.col("d"), F.col("cell"))).alias("m"))
-        .select("id", F.col("m.cell").alias("cell"))
-    )
+    return _l2_nearest(v, "v", cent, "cell", "c")
 
 
 def _salted_cell_join_sides(xm, ym, n_cells: int, x_id_col: str, spark):

@@ -631,30 +631,17 @@ def dedup_semantic_semdedup(spark, sf_dir):
 
     100 TB shape: centroids broadcast; ONE shuffle on cell id; pairwise
     work n·(n/k) with k scaled to the corpus (operators/dedup.py
-    semantic_dedup_verdicts docstring)."""
-    from graph_db_spark.operators.dedup import semantic_dedup_verdicts
+    semantic_dedup_tree_verdicts docstring; depth 1 = exact assignment)."""
+    from graph_db_spark.operators.dedup import semantic_dedup_tree_verdicts
     from graph_db_spark.operators.similarity import kmeans_fit
 
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    pert = e.select(
-        (F.col("vec_id") + F.lit(100000)).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, d: x
-            + F.lit(0.005)
-            * (((d * 31 + F.col("vec_id")) % 5) - 2).cast("double"),
-        ).alias("embedding"),
-    )
-    u = e.unionByName(pert)
+    u = _semdedup_planted_corpus(spark, sf_dir)
     # sampled fit (deterministic ~25% hash-sample): the n·k Lloyd term —
     # the exact route's measured scale floor — trains on n/4 rows here
     # and on a FIXED sample_target at scale; the oracle replicates the
     # sample + renumbered init bit-for-bit
     cent = kmeans_fit(u, k=8, n_iters=2, sample_mod=4)
-    return semantic_dedup_verdicts(u, cent, tau=0.99).select(
+    return semantic_dedup_tree_verdicts(u, [cent], tau=0.99).select(
         F.col("id").alias("vec_id"), "cell", "cent_cos", "pruned"
     )
 
@@ -736,30 +723,18 @@ def dedup_semantic_semdedup_hier(spark, sf_dir):
     verdicts can differ from the exact variant only for vectors whose
     true nearest fine centroid lies outside their 2 best coarse cells
     (the IVF n_probe trade), and the oracle replicates the two-level
-    route exactly (vc's r <= 2 is the probe set)."""
-    from graph_db_spark.operators.dedup import semantic_dedup_hier_verdicts
+    route exactly (vc's r <= 2 is the probe set). Runs the SemDeDup
+    descent at depth 2 (operators/dedup.semantic_dedup_tree_verdicts)."""
+    from graph_db_spark.operators.dedup import semantic_dedup_tree_verdicts
     from graph_db_spark.operators.similarity import kmeans_fit
 
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    pert = e.select(
-        (F.col("vec_id") + F.lit(100000)).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, d: x
-            + F.lit(0.005)
-            * (((d * 31 + F.col("vec_id")) % 5) - 2).cast("double"),
-        ).alias("embedding"),
-    )
-    u = e.unionByName(pert)
+    u = _semdedup_planted_corpus(spark, sf_dir)
     # sampled fine fit (~25% hash-sample; renumbered cells 0..7 keep the
     # coarse fit's id<3 init valid — it trains over just k=8 rows, no
     # sampling needed there). Oracle replicates sample + init exactly.
     cent = kmeans_fit(u, k=8, n_iters=2, sample_mod=4)
     coarse = kmeans_fit(cent, k=3, n_iters=2)
-    return semantic_dedup_hier_verdicts(u, cent, coarse, tau=0.99).select(
+    return semantic_dedup_tree_verdicts(u, [cent, coarse], tau=0.99).select(
         F.col("id").alias("vec_id"), "cell", "cent_cos", "pruned"
     )
 

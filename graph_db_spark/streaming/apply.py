@@ -688,7 +688,6 @@ def stream_dedup_near_banded_builtin(
     shingle_k: int = 3,
     watermark: str = "6 hours",
     claim_lag: str | None = None,
-    _emit_loser: bool = True,
 ) -> DataFrame:
     """Banded streaming near-dup with NO Python in the hot loop — the
     JVM-native form of ``stream_dedup_near_banded`` and the route a
@@ -745,15 +744,7 @@ def stream_dedup_near_banded_builtin(
     in-order ingest) to cut the dominant state store; a duplicate whose
     copies arrive out of event-time order by MORE than claim_lag is
     outside the tightened window and leaks (the same contract as the
-    watermark itself).
-
-    *_emit_loser* is a MEASUREMENT-ONLY knob (round-12 verdict item 5):
-    False restores the round-11 row-side emit — identical join, state,
-    and window, differing only in the final projection — so an A/B in
-    ONE session isolates the loser election's true wall cost from
-    between-session noise (the r12 readings, 118.3 vs 91.9 s at 500k,
-    were taken in different sessions). Never run production with False:
-    it reintroduces the survivor-annihilation hazard."""
+    watermark itself)."""
     horizon_ms = _duration_ms(watermark)
     lag_ms = _duration_ms(claim_lag) if claim_lag is not None else horizon_ms
     exploded = _banded_bucket_rows(spark, docs_dir, n_hashes, bands, shingle_k)
@@ -788,16 +779,8 @@ def stream_dedup_near_banded_builtin(
             "inner",
         )
         .select(
-            *(
-                (
-                    F.when(loser_is_row, F.col("doc_id"))
-                    .otherwise(F.col("c_doc"))
-                    .alias("doc_id"),
-                    F.when(loser_is_row, F.col("ts")).otherwise(F.col("c_ts")).alias("ts"),
-                )
-                if _emit_loser
-                else (F.col("doc_id"), F.col("ts"))
-            ),
+            F.when(loser_is_row, F.col("doc_id")).otherwise(F.col("c_doc")).alias("doc_id"),
+            F.when(loser_is_row, F.col("ts")).otherwise(F.col("c_ts")).alias("ts"),
             "band",
         )
     )

@@ -59,11 +59,14 @@ def test_bfs_visited_consolidation_boundary(spark, monkeypatch):
     )
     e_narrow = edges.select("src", "dst").persist()
     try:
-        for bcast in (True, False):
+        # the default guard broadcasts every level; a guard of 0 ids runs
+        # every level through the shuffle (degraded) branch
+        for max_ids in (GraphSnapshot.BFS_BROADCAST_MAX_IDS, 0):
+            monkeypatch.setattr(GraphSnapshot, "BFS_BROADCAST_MAX_IDS", max_ids)
             reach = sorted(
-                r["id"] for r in snap._reachable_on(e_narrow, 0, 100, bcast).collect()
+                r["id"] for r in snap._reachable_on(e_narrow, 0, 100).collect()
             )
-            assert reach == [0, 1, 2, 3, 4, 5, 6, 7], bcast
+            assert reach == [0, 1, 2, 3, 4, 5, 6, 7], max_ids
     finally:
         e_narrow.unpersist()
 
@@ -2078,7 +2081,7 @@ def test_semantic_dedup_prunes_planted_twins(spark, sf_dir):
     least-centroid-similar member (ties on id) — the keep-low rule.
     Also: no vector is pruned in a cell where it is the (cent_cos,
     id)-first member."""
-    from graph_db_spark.operators.dedup import semantic_dedup_verdicts
+    from graph_db_spark.operators.dedup import semantic_dedup_tree_verdicts
     from graph_db_spark.operators.similarity import kmeans_fit
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -2096,7 +2099,7 @@ def test_semantic_dedup_prunes_planted_twins(spark, sf_dir):
     u = e.unionByName(pert)
     cent = kmeans_fit(u, k=8, n_iters=2)
     rows = {
-        r.id: r for r in semantic_dedup_verdicts(u, cent, tau=0.99).collect()
+        r.id: r for r in semantic_dedup_tree_verdicts(u, [cent], tau=0.99).collect()
     }
     n_base = e.count()
     assert len(rows) == 2 * n_base  # one verdict per vector
@@ -2123,7 +2126,7 @@ def test_semantic_dedup_degenerate_zero_vector(spark):
     """A zero-norm vector (NULL cosine everywhere) gets NULL cell and
     pruned=false — the ivf_assign degenerate-input contract — and
     distinct far-apart vectors are never pruned at a high threshold."""
-    from graph_db_spark.operators.dedup import semantic_dedup_verdicts
+    from graph_db_spark.operators.dedup import semantic_dedup_tree_verdicts
 
     df = spark.createDataFrame(
         [
@@ -2135,7 +2138,7 @@ def test_semantic_dedup_degenerate_zero_vector(spark):
         "vec_id INT, embedding ARRAY<DOUBLE>",
     )
     cent = df.filter(F.col("vec_id") < 2)
-    got = {r.id: r for r in semantic_dedup_verdicts(df, cent, tau=0.99).collect()}
+    got = {r.id: r for r in semantic_dedup_tree_verdicts(df, [cent], tau=0.99).collect()}
     assert set(got) == {0, 1, 2, 9}
     assert got[9].cell is None and got[9].pruned is False
     assert not any(r.pruned for r in got.values())
@@ -2290,10 +2293,7 @@ def test_checkpoint_false_hatch_result_equivalence(spark):
     plan LAZINESS (no eager localCheckpoint jobs at construction), never
     results — semdedup exact, semdedup hierarchical, and DSIR all
     bit-match their checkpoint=True outputs."""
-    from graph_db_spark.operators.dedup import (
-        semantic_dedup_hier_verdicts,
-        semantic_dedup_verdicts,
-    )
+    from graph_db_spark.operators.dedup import semantic_dedup_tree_verdicts
     from graph_db_spark.operators.similarity import kmeans_fit
     from graph_db_spark.operators.text import dsir_weights
 
@@ -2308,14 +2308,14 @@ def test_checkpoint_false_hatch_result_equivalence(spark):
     def key(rs):
         return sorted((tuple(r) for r in rs), key=repr)
 
-    assert key(semantic_dedup_verdicts(df, cent, tau=0.9).collect()) == key(
-        semantic_dedup_verdicts(df, cent, tau=0.9, checkpoint=False).collect()
+    assert key(semantic_dedup_tree_verdicts(df, [cent], tau=0.9).collect()) == key(
+        semantic_dedup_tree_verdicts(df, [cent], tau=0.9, checkpoint=False).collect()
     )
     assert key(
-        semantic_dedup_hier_verdicts(df, cent, coarse, tau=0.9).collect()
+        semantic_dedup_tree_verdicts(df, [cent, coarse], tau=0.9).collect()
     ) == key(
-        semantic_dedup_hier_verdicts(
-            df, cent, coarse, tau=0.9, checkpoint=False
+        semantic_dedup_tree_verdicts(
+            df, [cent, coarse], tau=0.9, checkpoint=False
         ).collect()
     )
 
@@ -2514,31 +2514,39 @@ def test_semantic_pyramid_ks():
     assert semantic_pyramid_ks(1000, cell_target=8, branch=5) == [125, 25, 5]
 
 
-def test_semantic_dedup_tree_generalizes_exact_and_hier(spark):
-    """The arbitrary-depth tree route collapses to the exact assignment
-    at depth 1 and to the fixed 2-level hierarchical route at depth 2 —
-    bit-for-bit, on a corpus small enough to compare all three."""
-    from graph_db_spark.operators.dedup import (
-        semantic_dedup_hier_verdicts,
-        semantic_dedup_tree_verdicts,
-        semantic_dedup_verdicts,
-    )
-    from graph_db_spark.operators.similarity import kmeans_fit
+def test_semantic_dedup_tree_generalizes_exact_and_hier(spark, sf_dir):
+    """The SemDeDup descent at depth 1 ([cent]: exact assignment) and at
+    depth 2 ([cent, coarse]: the two-level hierarchical route) matches
+    the hand-written DuckDB oracles of dedup_semantic_semdedup and
+    dedup_semantic_semdedup_hier — independent SQL references of the
+    exact and hierarchical routes — under tools/check_oracle.py's
+    normalisation. Their constants (k=8, sample_mod=4, k'=3) do not
+    depend on the scale factor."""
+    import importlib.util
+    import os
 
-    df = spark.range(200).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(0), F.lit(7)),
-            lambda d: ((F.col("id") * 31 + d * 17) % 97).cast("double"),
-        ).alias("embedding"),
+    import duckdb
+
+    from graph_db_spark.queries import REGISTRY
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools",
+        "check_oracle.py",
     )
-    key = lambda rs: sorted((tuple(r) for r in rs), key=repr)  # noqa: E731
-    cent = kmeans_fit(df, k=12, n_iters=2, sample_target=10_000)
-    exact = semantic_dedup_verdicts(df, cent, tau=0.95).collect()
-    assert key(semantic_dedup_tree_verdicts(df, [cent], tau=0.95).collect()) == key(exact)
-    coarse = kmeans_fit(cent, k=4, n_iters=2)
-    hier = semantic_dedup_hier_verdicts(df, cent, coarse, tau=0.95).collect()
-    assert key(semantic_dedup_tree_verdicts(df, [cent, coarse], tau=0.95).collect()) == key(hier)
+    spec = importlib.util.spec_from_file_location("check_oracle", path)
+    check_oracle = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(check_oracle)
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'")
+    n = 2 * con.sql("SELECT count(*) FROM embeddings").fetchone()[0]
+    for name in ("dedup_semantic_semdedup", "dedup_semantic_semdedup_hier"):
+        q = REGISTRY[name]
+        got = check_oracle.normalize(q.build(spark, sf_dir).toPandas())
+        want = check_oracle.normalize(con.sql(q.oracle).df())
+        assert len(got[1]) == n, name  # one verdict per vector
+        assert got == want, name
 
 
 def test_semantic_dedup_default_entry_point(spark, sf_dir):
@@ -2549,7 +2557,7 @@ def test_semantic_dedup_default_entry_point(spark, sf_dir):
     derived constants (depth 1 at this corpus: n=1000 → k=8 ≤ branch)."""
     from graph_db_spark.operators.dedup import (
         semantic_dedup,
-        semantic_dedup_verdicts,
+        semantic_dedup_tree_verdicts,
         semantic_pyramid_ks,
     )
     from graph_db_spark.operators.similarity import kmeans_fit
@@ -2578,7 +2586,7 @@ def test_semantic_dedup_default_entry_point(spark, sf_dir):
     ks = semantic_pyramid_ks(n)
     assert ks == [8]  # constant-cell rule at gate scale: depth 1
     cent = kmeans_fit(u, k=ks[0], n_iters=2, sample_target=max(10_000, 50 * ks[0]))
-    manual = semantic_dedup_verdicts(u, cent, tau=0.99).collect()
+    manual = semantic_dedup_tree_verdicts(u, [cent], tau=0.99).collect()
     key = lambda rs: sorted((tuple(r) for r in rs), key=repr)  # noqa: E731
     assert key(got) == key(manual)
 
@@ -2999,6 +3007,49 @@ def test_ivfpq_contract(spark, sf_dir):
     probe_sets = {q: {c for _, c in sorted(v_)[:2]} for q, v_ in probe_sets.items()}
     for r in got:
         assert cells[r["nid"]] in probe_sets[r["qid"]], r
+
+
+def test_degenerate_vectors_get_no_l2_assignment(spark):
+    """A ragged vector and one with a NULL element have a NULL squared
+    distance to every codeword. The shared L2 step drops them: they get
+    no row from kmeans_assign or pq_encode (rather than being coded as
+    the lowest cell, which struct-min's NULLs-first order would pick),
+    so they never enter a PQ or IVF-PQ candidate set."""
+    from graph_db_spark.operators.similarity import (
+        ivfpq_adc_topk,
+        ivfpq_residual_topk,
+        kmeans_assign,
+        kmeans_fit,
+        pq_adc_topk,
+        pq_encode,
+        pq_fit,
+    )
+
+    clean = [
+        (i, [float((i * 3 + j * 5) % 7) - 3.0 + 10.0 * (i % 2) for j in range(4)])
+        for i in range(16)
+    ]
+    bad = [(100, [1.0, 2.0, 3.0]), (101, [1.0, None, 2.0, 3.0])]
+    schema = "vec_id LONG, embedding ARRAY<DOUBLE>"
+    fit_df = spark.createDataFrame(clean, schema)
+    df = spark.createDataFrame(clean + bad, schema)
+    clean_ids = {i for i, _ in clean}
+
+    coarse = kmeans_fit(fit_df, k=2, n_iters=2)
+    books = pq_fit(fit_df, m=2, n_codes=2, n_iters=2)
+    assert {r["id"] for r in kmeans_assign(df, coarse).collect()} == clean_ids
+    assert {r["id"] for r in pq_encode(df, books).collect()} == clean_ids
+
+    qs = fit_df.filter(F.col("vec_id") < 3)
+    full = pq_adc_topk(df, qs, books, k=10_000).collect()
+    for q in range(3):
+        assert {r["nid"] for r in full if r["qid"] == q} == clean_ids - {q}
+    ivf = ivfpq_adc_topk(df, qs, coarse, books, k=10_000, n_probe=2).collect()
+    res = ivfpq_residual_topk(
+        df, qs, coarse, k=10_000, n_probe=2, m=2, n_codes=2, n_iters=2
+    ).collect()
+    for got in (ivf, res):
+        assert got and {r["nid"] for r in got} <= clean_ids
 
 
 def test_ivfpq_residual_recall_beats_raw(spark):

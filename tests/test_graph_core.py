@@ -284,7 +284,7 @@ def test_bfs_broadcast_degrade_path_matches(spark, sf_dir, monkeypatch):
     2. mid-traversal degrade (guard lowered to 100 ids → the loop switches
        to shuffle joins after the first level, and get_stats' semi-joins
        take the no-broadcast hint too),
-    3. broadcast disabled from level 0 (broadcast_frontier=False).
+    3. broadcast disabled from level 0 (guard lowered to 0 ids).
     """
     from graph_db_spark.catalogue import tpch_graph
 
@@ -296,7 +296,8 @@ def test_bfs_broadcast_degrade_path_matches(spark, sf_dir, monkeypatch):
     degraded = g.get_stats()
     assert degraded.as_tuple() == base.as_tuple()
 
-    no_bcast = g.get_stats(broadcast_frontier=False)
+    monkeypatch.setattr(GraphSnapshot, "BFS_BROADCAST_MAX_IDS", 0)
+    no_bcast = g.get_stats()
     assert no_bcast.as_tuple() == base.as_tuple()
 
 
@@ -309,7 +310,8 @@ def test_reachable_degrade_path_matches(spark, sf_dir, monkeypatch):
     base = g.reachable()
     monkeypatch.setattr(GraphSnapshot, "BFS_BROADCAST_MAX_IDS", 100)
     degraded = g.reachable()
-    shuffled = g.reachable(broadcast_frontier=False)
+    monkeypatch.setattr(GraphSnapshot, "BFS_BROADCAST_MAX_IDS", 0)
+    shuffled = g.reachable()
     assert degraded.exceptAll(base).unionByName(base.exceptAll(degraded)).isEmpty()
     assert shuffled.exceptAll(base).unionByName(base.exceptAll(shuffled)).isEmpty()
 

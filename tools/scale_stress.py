@@ -185,8 +185,7 @@ def main() -> None:
         "landmark_distances", "ann_ivf_kmeans", "stream_dedup_banded",
         "exact_substring_spans", "semdedup", "semdedup_hier",
         "semdedup_default", "stream_dedup_banded_builtin",
-        "stream_dedup_builtin_claim_lag", "stream_dedup_loser_ab",
-        "semantic_incremental_store",
+        "stream_dedup_builtin_claim_lag", "semantic_incremental_store",
         "prefix_jaccard", "containment_exact",
         "ivfpq_persisted", "ivfpq_persisted_build",
         "simhash_banded_wide", "bfs_deep",
@@ -271,7 +270,7 @@ def main() -> None:
                 try:
                     sw0 = shuffle_write_bytes(spark)
                     t0 = time.time()
-                    reach = s._reachable_on(edges, 0, 1000, True)
+                    reach = s._reachable_on(edges, 0, 1000)
                     n = reach.count()
                     loop_s = round(time.time() - t0, 2)
                     sw1 = shuffle_write_bytes(spark)
@@ -761,58 +760,6 @@ def main() -> None:
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
 
-    # -- builtin route: loser-election cost A/B (round-12 verdict item 5) --
-    # The r12 readings (118.3 s loser-emit vs 91.9 s r11 row-emit at 500k)
-    # came from DIFFERENT sessions; the execution diff is only the final
-    # projection over the (rare) matched rows, so the delta is suspected
-    # noise. Same-session A/B with _emit_loser toggled isolates it:
-    # identical corpus, identical plan up to the last select.
-    if want("stream_dedup_loser_ab"):
-        n = 500_000 // div
-        tmp = tempfile.mkdtemp(prefix="stress_loserab_")
-        try:
-            synthetic_docs(spark, n).select(
-                "doc_id",
-                "text",
-                F.lit("en").alias("lang"),
-                F.lit("src").alias("source"),
-                F.length("text").cast("long").alias("n_chars"),
-            ).write.parquet(os.path.join(tmp, "docs"))
-            # ABAB within one session: the first full-scale A/B read 133.7
-            # vs 115.9 s in A-then-B order while the fast run read 19.1 vs
-            # 30.0 in the SAME order — ordering/warm-up effects are of the
-            # same magnitude as the difference, so take two interleaved
-            # repeats and compare best-of per variant.
-            for variant, emit_loser in (
-                ("loser", True),
-                ("row_r11", False),
-                ("loser_rep", True),
-                ("row_r11_rep", False),
-            ):
-
-                def run_ab(t=tmp, v=variant, el=emit_loser):
-                    q = (
-                        stream_dedup_near_banded_builtin(
-                            spark, os.path.join(t, "docs"), _emit_loser=el
-                        )
-                        .writeStream.outputMode("append")
-                        .format("memory")
-                        .queryName(f"stress_loserab_{v}")
-                        .start()
-                    )
-                    try:
-                        q.processAllAvailable()
-                        dropped = spark.sql(
-                            f"SELECT count(DISTINCT doc_id) AS n FROM stress_loserab_{v}"
-                        ).collect()[0]["n"]
-                    finally:
-                        q.stop()
-                    return {"dropped": dropped, "emit_loser": el}
-
-                run("stream_dedup_loser_ab", f"10x_{variant}", run_ab)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-
     # -- builtin route: claim_lag state bound (round-11 verdict item 6) ----
     # The builtin route's third state store (the rows join side) is only
     # needed to meet claims elected at or after the row's own micro-batch,
@@ -1015,7 +962,7 @@ def main() -> None:
 
         def sd(e=emb, n=n, stash=stash):
             k, target, cents = sd_fit(e, n)
-            verd = D.semantic_dedup_verdicts(e, cents, tau=0.95)
+            verd = D.semantic_dedup_tree_verdicts(e, [cents], tau=0.95)
             stash["verd"] = verd
             return {
                 "vectors": n,
@@ -1072,7 +1019,7 @@ def main() -> None:
             # sampled-fit cells are renumbered 0..k-1, so the coarse
             # fit's id<kk init stays valid; k rows need no sampling
             coarse = kmeans_fit(cents, k=kk, n_iters=2)
-            verd = D.semantic_dedup_hier_verdicts(e, cents, coarse, tau=0.95)
+            verd = D.semantic_dedup_tree_verdicts(e, [cents, coarse], tau=0.95)
             return {
                 "vectors": n,
                 "k": k,
